@@ -23,6 +23,18 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def _bench_rounds(repo_dir: str) -> list[tuple[int, str]]:
+    """``(round, path)`` of every driver ``BENCH_r<N>.json`` record,
+    oldest round first.  Rounds compare as PARSED numbers (``r9`` <
+    ``r10``), and ``BENCH_r<N>_c<M>.json`` companions (records taken on
+    a different core count) are skipped, like with like."""
+    return sorted(
+        (int(m.group(1)), path)
+        for path in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
+        if (m := re.search(r"BENCH_r(\d+)\.json$", path))
+    )
+
+
 def load_prior_timings(repo_dir: str) -> tuple[dict[str, float], str | None]:
     """Per-query timings from the newest ``BENCH_r*.json`` the driver
     recorded, for round-over-round regression diffing.
@@ -33,8 +45,7 @@ def load_prior_timings(repo_dir: str) -> tuple[dict[str, float], str | None]:
     ``"name": seconds`` pairs from the tail.  Returns ({}, None) when
     nothing is recoverable; the bench must never fail because history
     is missing."""
-    paths = sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json")))
-    for path in reversed(paths):
+    for _rnd, path in reversed(_bench_rounds(repo_dir)):
         try:
             with open(path) as f:
                 rec = json.load(f)
@@ -210,11 +221,7 @@ def main() -> None:
     # checkout must not sink the bench.
     repo = os.path.dirname(os.path.abspath(__file__))
     try:
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(repo, "BENCH_r*.json"))
-            if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
+        rounds = [rnd for rnd, _path in _bench_rounds(repo)]
         n_round = int(
             os.environ.get("SPARK_GRAFT_ROUND", max(rounds, default=0) + 1)
         )

@@ -1,8 +1,28 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Brute-force exact top-k as the correctness baseline; a random-hyperplane
-LSH bucketed variant as the scale path (candidate generation touches only
-matching buckets instead of the full cross product).
+Brute-force exact top-k is the correctness baseline; five approximate
+families (random-hyperplane LSH, IVF, inverted multi-index, PQ, IVF-PQ)
+are the scale paths.  All six share one skeleton — the REPOSE shape,
+partition → local index → prune → rescore — and only the index and
+prune steps differ by family:
+
+1. ``_sides`` projects both inputs to ``(query_id, qvec)`` /
+   ``(neighbor_id, cvec)``;
+2. candidates:
+   - brute force: the broadcast cross product;
+   - LSH / IVF / IMI: a keyed probe (``_probe_topk``) — each side
+     gets bucket/cell keys from one Arrow pass, and candidates come
+     from a key equi-join against the broadcast query side (LSH alone
+     dedups, since a pair can collide in several tables);
+   - PQ / IVF-PQ: an ADC scan (``_adc_topk``) — one Arrow pass over
+     the corpus scores codes against per-query lookup tables, keeps
+     the top ``candidates`` per query, and joins vectors back by id;
+3. ``_rescore_rank``: exact cosine over the candidate pairs, then the
+   ``(cos_sim DESC, neighbor_id ASC)`` row-number cut to ``k``.
+
+Approximation therefore touches only the candidate set, never a
+reported score.  Quantizers (``_spherical_kmeans``, ``_train_books``)
+train driver-side on a bounded content-keyed sample.
 
 Vector math runs as Arrow-batched numpy inside ``mapInPandas`` — one
 BLAS matmul per batch.  Spark's expression-level alternative
@@ -149,12 +169,27 @@ def mmr_select(
     )
 
 
-def _content_keyed_sample(train: DataFrame, cap: int, seed: int):
-    """Collect a deterministic CONTENT-KEYED training sample as an
-    L2-normalized float64 matrix.  ``train`` must expose ``_i`` (id) and
-    ``_v`` (vector).  ``xxhash64(id) mod step == 0`` with ``step`` sized
-    from a cheap id-only count thins to between ``cap`` and ``2·cap``
-    rows (a pure function of the DATA, invariant to file layout), then a
+def _unit(x):
+    """Row-wise L2 normalization of a float matrix (zero rows stay 0)."""
+    import numpy as np
+
+    return x / np.maximum(np.linalg.norm(x, axis=-1, keepdims=True), 1e-12)
+
+
+def _content_keyed_sample(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    cap: int,
+    seed: int,
+    fraction: float = 1.0,
+):
+    """Collect a deterministic CONTENT-KEYED training sample of
+    ``corpus`` (optionally Bernoulli-thinned to ``fraction`` first) as
+    an L2-normalized float64 matrix.  ``xxhash64(id) mod step == 0``
+    with ``step`` sized from a cheap id-only count thins to between
+    ``cap`` and ``2·cap`` rows (a pure function of the DATA, invariant
+    to file layout), then a
     hash-ordered cut (id tiebreak) caps it — ordering by the hash keeps
     the residual cut content-keyed too; an id- or partition-ordered cut
     would bias codebooks toward the oldest id prefix / earliest files on
@@ -162,6 +197,11 @@ def _content_keyed_sample(train: DataFrame, cap: int, seed: int):
     retrain a different quantizer from identical data."""
     import numpy as np
 
+    train = corpus.select(
+        F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")
+    )
+    if fraction < 1.0:
+        train = train.sample(fraction=fraction, seed=seed)
     n_train = train.select("_i").count()
     step = max(1, n_train // cap)
     h = F.xxhash64(F.col("_i"), F.lit(seed))
@@ -170,11 +210,9 @@ def _content_keyed_sample(train: DataFrame, cap: int, seed: int):
         .orderBy(h, F.col("_i"))
         .limit(cap)
     )
-    sample = np.asarray([r["_v"] for r in rows.collect()], dtype=np.float64)
-    sample /= np.maximum(
-        np.linalg.norm(sample, axis=1, keepdims=True), 1e-12
+    return _unit(
+        np.asarray([r["_v"] for r in rows.collect()], dtype=np.float64)
     )
-    return sample
 
 
 def _spherical_kmeans(sample, nlist: int, seed: int, max_iter: int):
@@ -269,6 +307,29 @@ def _train_opq(mat, m: int, ksub: int, seed: int, max_iter: int,
     return rot, books
 
 
+def _train_books(mat, m: int, ksub: int, seed: int, max_iter: int,
+                 opq: bool):
+    """``(rotation or None, books)``: OPQ-rotated codebooks when ``opq``
+    (:func:`_train_opq`), plain per-subspace ones otherwise.  The
+    rotation is applied identically to corpus and query vectors, so
+    every exact-duplicate guarantee built on codes (PQ, IVF-PQ, IMI)
+    is rotation-invariant: a duplicate rotates to the same vector."""
+    if opq:
+        return _train_opq(mat, m, ksub, seed, max_iter)
+    return None, _train_pq_books(mat, m, ksub, seed, max_iter)
+
+
+def _sub_d2(x, books):
+    """Squared distance of each d/m-dim slice of ``x`` (any leading
+    shape, trailing d) to every centroid of its subspace codebook:
+    ``(..., m, ksub)``.  ``argmin(axis=-1)`` encodes; on query vectors
+    the result is the ADC lookup table."""
+    m, _ksub, dsub = books.shape
+    return (
+        (x.reshape(*x.shape[:-1], m, 1, dsub) - books) ** 2
+    ).sum(axis=-1)
+
+
 def _stack(col: "pd.Series"):
     import numpy as np
 
@@ -312,6 +373,57 @@ def cosine_score_pairs(
     return pairs.mapInPandas(run, schema)
 
 
+def _sides(
+    queries: DataFrame, corpus: DataFrame, vec_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two projections every top-k operator starts from:
+    ``(query_id, qvec)`` and ``(neighbor_id, cvec)``."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    )
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
+    )
+    return q, c
+
+
+def _rescore_rank(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine over candidate ``pairs`` (which carry ``qvec`` and
+    ``cvec``), ranked per query by ``(cos_sim DESC, neighbor_id ASC)``
+    and cut to ``k``: (query_id, neighbor_id, cos_sim, rank)."""
+    scored = cosine_score_pairs(
+        pairs, "qvec", "cvec", ["query_id", "neighbor_id"]
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos_sim"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+
+
+def _probe_topk(
+    qb: DataFrame, cb: DataFrame, key: str, k: int, dedup: bool = False
+) -> DataFrame:
+    """Keyed-probe candidates (LSH buckets, IVF cells, IMI joint cells):
+    equi-join the keyed corpus ``cb`` against the broadcast keyed
+    queries ``qb`` on ``key``, drop self-matches, then rescore + rank.
+    ``dedup`` drops repeated (query, neighbor) pairs — needed only when
+    one vector carries several keys that can each collide (LSH tables).
+    The dedup shuffles the vector payloads with the ids; an id-only
+    dedup with vectors re-joined by id was tried and its A/B was
+    inconclusive (README design rule 2)."""
+    candidates = (
+        cb.join(F.broadcast(qb), on=key)
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", "qvec", "cvec")
+    )
+    if dedup:
+        candidates = candidates.dropDuplicates(["query_id", "neighbor_id"])
+    return _rescore_rank(candidates, k)
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -326,25 +438,11 @@ def brute_force_topk(
     Returns (query_id, neighbor_id, cos_sim, rank) with deterministic
     ordering (sim DESC, neighbor id ASC).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
+    q, c = _sides(queries, corpus, vec_col, id_col)
     pairs = c.crossJoin(F.broadcast(q)).where(
         F.col("query_id") != F.col("neighbor_id")
     )
-    scored = cosine_score_pairs(
-        pairs, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _rescore_rank(pairs, k)
 
 
 def hyperplane_keys(
@@ -424,16 +522,11 @@ def _cell_keys(
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         import numpy as np
 
-        c_m = np.asarray(c_rows, dtype=np.float64)  # (nlist, d)
-        c_m /= np.maximum(np.linalg.norm(c_m, axis=1, keepdims=True), 1e-12)
+        c_m = _unit(np.asarray(c_rows, dtype=np.float64))  # (nlist, d)
         for b in batches:
             if len(b) == 0:
                 continue
-            v = _stack(b[vec_col])
-            v = v / np.maximum(
-                np.linalg.norm(v, axis=1, keepdims=True), 1e-12
-            )
-            sims = v @ c_m.T  # (n, nlist)
+            sims = _unit(_stack(b[vec_col])) @ c_m.T  # (n, nlist)
             top = np.argsort(-sims, axis=1)[:, :nprobe]  # deterministic
             for j in range(nprobe):
                 o = b.copy()
@@ -523,40 +616,16 @@ def ivf_topk(
         # count job; fixture queries pass an explicit nlist instead)
         nlist = adaptive_nlist(corpus.count())
     cap = min(max(nlist * 10_000, 100_000), _TRAIN_SAMPLE_MAX)
-    train = corpus.select(
-        F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")
+    sample = _content_keyed_sample(
+        corpus, id_col, vec_col, cap, seed, train_fraction
     )
-    if train_fraction < 1.0:
-        train = train.sample(fraction=train_fraction, seed=seed)
-    sample = _content_keyed_sample(train, cap, seed)
     centers = _spherical_kmeans(sample, nlist, seed, max_iter).tolist()
-
-    cb = _cell_keys(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        ),
-        centers, nprobe=1, vec_col="cvec",
-    )
-    qb = _cell_keys(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        ),
-        centers, nprobe=nprobe, vec_col="qvec",
-    )
-    candidates = (
-        cb.join(F.broadcast(qb), on="cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qvec", "cvec")
-    )
-    scored = cosine_score_pairs(
-        candidates, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    q, c = _sides(queries, corpus, vec_col, id_col)
+    return _probe_topk(
+        _cell_keys(q, centers, nprobe=nprobe, vec_col="qvec"),
+        _cell_keys(c, centers, nprobe=1, vec_col="cvec"),
+        "cell",
+        k,
     )
 
 
@@ -575,34 +644,89 @@ def lsh_bucketed_topk(
     At 100 TB the corpus side is partitioned by the bucket key and only
     colliding buckets are scored — candidate count per query is
     L × bucket-size instead of the corpus size."""
-    qb = hyperplane_keys(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        ),
-        planes, tables, vec_col="qvec",
+    q, c = _sides(queries, corpus, vec_col, id_col)
+    return _probe_topk(
+        hyperplane_keys(q, planes, tables, vec_col="qvec"),
+        hyperplane_keys(c, planes, tables, vec_col="cvec"),
+        "key",
+        k,
+        dedup=True,
     )
-    cb = hyperplane_keys(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        ),
-        planes, tables, vec_col="cvec",
-    )
-    candidates = (
-        cb.join(F.broadcast(qb), on="key")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qvec", "cvec")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    scored = cosine_score_pairs(
-        candidates, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
+
+
+_ADC_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.LongType(), True),
+        T.StructField("neighbor_id", T.LongType(), True),
+        T.StructField("approx_d", T.DoubleType(), True),
+    ]
+)
+
+
+def _collect_queries(q: DataFrame):
+    """Collect the (bounded) ``(query_id, qvec)`` side to the driver:
+    ``(ids, L2-normalized float64 matrix)`` — the input the ADC lookup
+    tables are built from."""
+    import numpy as np
+
+    rows = q.collect()
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        np.asarray([r["query_id"] for r in rows]),
+        _unit(np.asarray([r["qvec"] for r in rows], dtype=np.float64)),
     )
+
+
+def _adc_cut(query_id, ids, approx, n: int) -> "pd.DataFrame":
+    """One query's ``n`` best ADC candidates of a batch, by
+    ``(approx_d, neighbor_id)`` — the batch-local half of the window."""
+    import numpy as np
+    import pandas as pd
+
+    order = np.lexsort((ids, approx))[:n]
+    return pd.DataFrame(
+        {
+            "query_id": query_id,
+            "neighbor_id": ids[order],
+            "approx_d": approx[order],
+        }
+    )
+
+
+def _adc_topk(
+    q: DataFrame, c: DataFrame, score, candidates: int, k: int
+) -> DataFrame:
+    """ADC-scan candidates (PQ, IVF-PQ): ONE ``mapInPandas`` pass over
+    the corpus side ``c`` hands each batch's ids and L2-normalized
+    vectors to ``score(ids, x)``, which returns per-query
+    :func:`_adc_cut` frames; the global top-``candidates`` per query
+    (a window over the small candidate table) then joins the vectors
+    back by id and is rescored + ranked exactly.  The candidate
+    exchanges carry ids and ``approx_d`` only, never a vector."""
+
+    def scan(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        import pandas as pd
+
+        for b in batches:
+            if len(b) == 0:
+                continue
+            ids = b["neighbor_id"].to_numpy()
+            rows = score(ids, _unit(_stack(b["cvec"])))
+            if rows:
+                yield pd.concat(rows, ignore_index=True)
+
+    cand = c.mapInPandas(scan, _ADC_SCHEMA).where(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+    wc = Window.partitionBy("query_id").orderBy(
+        F.asc("approx_d"), F.asc("neighbor_id")
+    )
+    top_cand = (
+        cand.withColumn("_r", F.row_number().over(wc))
+        .where(F.col("_r") <= candidates)
+        .drop("_r", "approx_d")
+    )
+    pairs = top_cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
+    return _rescore_rank(pairs, k)
 
 
 def pq_topk(
@@ -659,106 +783,27 @@ def pq_topk(
     import numpy as np
 
     cap = min(max(ksub * 10_000, 100_000), _TRAIN_SAMPLE_MAX)
-    sample = _content_keyed_sample(
-        corpus.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")),
-        cap,
-        seed,
-    )
-    dsub = sample.shape[1] // m
-    if opq:
-        # OPQ: learned orthogonal pre-rotation (Ge et al. 2013) before
-        # slicing — same code budget, finer quantization; one extra
-        # d×d matmul per Arrow batch, guarantee-preserving (a
-        # duplicate rotates to the same vector, hence the same codes).
-        rot, books_arr = _train_opq(sample, m, ksub, seed, max_iter)
-    else:
-        rot = None
-        books_arr = _train_pq_books(sample, m, ksub, seed, max_iter)
-
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    ).collect()
-    q_ids = np.asarray([r["query_id"] for r in q_rows])
-    q_mat = np.asarray([r["qvec"] for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
+    sample = _content_keyed_sample(corpus, id_col, vec_col, cap, seed)
+    rot, books_arr = _train_books(sample, m, ksub, seed, max_iter, opq)
+    q, c = _sides(queries, corpus, vec_col, id_col)
+    q_ids, q_mat = _collect_queries(q)
     if rot is not None:
         q_mat = q_mat @ rot
     # ADC tables: tables[q, j, c] = ||q_slice_j - books[j][c]||²
-    tables = (
-        (q_mat.reshape(len(q_mat), m, 1, dsub) - books_arr[None]) ** 2
-    ).sum(axis=3)
+    tables = _sub_d2(q_mat, books_arr)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), True),
-            T.StructField("neighbor_id", T.LongType(), True),
-            T.StructField("approx_d", T.DoubleType(), True),
+    def score(ids, x):
+        if rot is not None:
+            x = x @ rot
+        codes = _sub_d2(x, books_arr).argmin(axis=-1)
+        # approx[i, q] = Σ_j tables[q, j, codes[i, j]]
+        approx = tables[:, np.arange(m)[None, :], codes].sum(axis=2).T
+        return [
+            _adc_cut(q_ids[qi], ids, approx[:, qi], candidates)
+            for qi in range(len(q_ids))
         ]
-    )
 
-    def scan(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-        import pandas as pd
-
-        for b in batches:
-            if len(b) == 0:
-                continue
-            ids = b["neighbor_id"].to_numpy()
-            x = _stack(b["cvec"])
-            x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-            if rot is not None:
-                x = x @ rot
-            xs = x.reshape(len(x), m, 1, dsub)
-            codes = ((xs - books_arr[None]) ** 2).sum(axis=3).argmin(axis=2)
-            # approx[i, q] = Σ_j tables[q, j, codes[i, j]]
-            approx = tables[:, np.arange(m)[None, :], codes].sum(axis=2).T
-            c_eff = min(candidates, len(ids))
-            rows = []
-            for qi in range(len(q_ids)):
-                order = np.lexsort((ids, approx[:, qi]))[:c_eff]
-                rows.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": q_ids[qi],
-                            "neighbor_id": ids[order],
-                            "approx_d": approx[order, qi],
-                        }
-                    )
-                )
-            yield pd.concat(rows, ignore_index=True)
-
-    cand = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        )
-        .mapInPandas(scan, out_schema)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d"), F.asc("neighbor_id")
-    )
-    top_cand = (
-        cand.withColumn("_r", F.row_number().over(wc))
-        .where(F.col("_r") <= candidates)
-        .drop("_r", "approx_d")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    pairs = top_cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
-    scored = cosine_score_pairs(
-        pairs, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _adc_topk(q, c, score, candidates, k)
 
 
 def ivfpq_topk(
@@ -825,135 +870,49 @@ def ivfpq_topk(
     import numpy as np
 
     cap = min(max(max(nlist, ksub) * 10_000, 100_000), _TRAIN_SAMPLE_MAX)
-    sample = _content_keyed_sample(
-        corpus.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")),
-        cap,
-        seed,
-    )
+    sample = _content_keyed_sample(corpus, id_col, vec_col, cap, seed)
     centers_m = _spherical_kmeans(sample, nlist, seed, max_iter)
     s_assign = np.argmax(sample @ centers_m.T, axis=1)
-    if opq:
-        # OPQ on the RESIDUALS: coarse assignment is invariant under a
-        # joint rotation (argmax(xR·(CR)ᵀ) == argmax(x·Cᵀ)), so the
-        # learned rotation only re-slices the residual space the PQ
-        # codes quantize — the FAISS ``OPQMatrix`` + ``IndexIVFPQ``
-        # composition.  Guarantee-preserving: a duplicate shares its
-        # query's cell and rotated residual, so its ADC sum stays the
-        # per-term lower bound.
-        rot, books_arr = _train_opq(
-            sample - centers_m[s_assign], m, ksub, seed, max_iter
-        )
-    else:
-        rot = None
-        books_arr = _train_pq_books(
-            sample - centers_m[s_assign], m, ksub, seed, max_iter
-        )
-    dsub = sample.shape[1] // m
-
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    ).collect()
-    q_ids = np.asarray([r["query_id"] for r in q_rows])
-    q_mat = np.asarray([r["qvec"] for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-    nq = len(q_ids)
+    # OPQ on the RESIDUALS: coarse assignment is invariant under a
+    # joint rotation (argmax(xR·(CR)ᵀ) == argmax(x·Cᵀ)), so the learned
+    # rotation only re-slices the residual space the PQ codes quantize
+    # — the FAISS ``OPQMatrix`` + ``IndexIVFPQ`` composition.
+    rot, books_arr = _train_books(
+        sample - centers_m[s_assign], m, ksub, seed, max_iter, opq
+    )
+    q, c = _sides(queries, corpus, vec_col, id_col)
+    q_ids, q_mat = _collect_queries(q)
     probe = np.argsort(-(q_mat @ centers_m.T), axis=1)[:, :nprobe]  # (nq, p)
     # Per-(query, probed cell) ADC tables from the query's residual
     # against that cell's centroid: (nq, nprobe, m, ksub).
     qr = q_mat[:, None, :] - centers_m[probe]
     if rot is not None:
         qr = qr @ rot
-    tables = (
-        (qr.reshape(nq, nprobe, m, 1, dsub) - books_arr[None, None]) ** 2
-    ).sum(axis=4)
+    tables = _sub_d2(qr, books_arr)
     # Inverted probe map: cell -> [(query index, probe slot), ...].
     probers: dict[int, list[tuple[int, int]]] = {}
-    for qi in range(nq):
-        for pi in range(nprobe):
-            probers.setdefault(int(probe[qi, pi]), []).append((qi, pi))
+    for qi, cells in enumerate(probe):
+        for pi, cell in enumerate(cells):
+            probers.setdefault(int(cell), []).append((qi, pi))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), True),
-            T.StructField("neighbor_id", T.LongType(), True),
-            T.StructField("approx_d", T.DoubleType(), True),
-        ]
-    )
+    def score(ids, x):
+        cell = np.argmax(x @ centers_m.T, axis=1)
+        r = x - centers_m[cell]
+        if rot is not None:
+            r = r @ rot
+        codes = _sub_d2(r, books_arr).argmin(axis=-1)  # (n, m)
+        rows = []
+        for cid in np.unique(cell):
+            mask = cell == cid
+            m_ids, m_codes = ids[mask], codes[mask]
+            for qi, pi in probers.get(int(cid), ()):
+                approx = tables[qi, pi][np.arange(m)[None, :], m_codes]
+                rows.append(
+                    _adc_cut(q_ids[qi], m_ids, approx.sum(axis=1), candidates)
+                )
+        return rows
 
-    def scan(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
-        import pandas as pd
-
-        for b in batches:
-            if len(b) == 0:
-                continue
-            ids = b["neighbor_id"].to_numpy()
-            x = _stack(b["cvec"])
-            x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-            cell = np.argmax(x @ centers_m.T, axis=1)
-            r = x - centers_m[cell]
-            if rot is not None:
-                r = r @ rot
-            codes = (
-                (r.reshape(len(x), m, 1, dsub) - books_arr[None]) ** 2
-            ).sum(axis=3).argmin(axis=2)  # (n, m)
-            c_eff = min(candidates, len(ids))
-            rows = []
-            for c in np.unique(cell):
-                hits = probers.get(int(c))
-                if not hits:
-                    continue
-                mask = cell == c
-                m_ids, m_codes = ids[mask], codes[mask]
-                for qi, pi in hits:
-                    approx = tables[qi, pi][
-                        np.arange(m)[None, :], m_codes
-                    ].sum(axis=1)
-                    order = np.lexsort((m_ids, approx))[:c_eff]
-                    rows.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": q_ids[qi],
-                                "neighbor_id": m_ids[order],
-                                "approx_d": approx[order],
-                            }
-                        )
-                    )
-            if rows:
-                yield pd.concat(rows, ignore_index=True)
-
-    cand = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        )
-        .mapInPandas(scan, out_schema)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d"), F.asc("neighbor_id")
-    )
-    top_cand = (
-        cand.withColumn("_r", F.row_number().over(wc))
-        .where(F.col("_r") <= candidates)
-        .drop("_r", "approx_d")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    pairs = top_cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
-    scored = cosine_score_pairs(
-        pairs, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _adc_topk(q, c, score, candidates, k)
 
 
 # Soft guard for the interpreted per-row frontier heap in _imi_keys:
@@ -1034,10 +993,7 @@ def _imi_keys(
         for b in batches:
             if len(b) == 0:
                 continue
-            v = _stack(b[vec_col])
-            v = v / np.maximum(
-                np.linalg.norm(v, axis=1, keepdims=True), 1e-12
-            )
+            v = _unit(_stack(b[vec_col]))
             if rm is not None:
                 v = v @ rm
             h0, h1 = v[:, :dh], v[:, dh:]
@@ -1139,54 +1095,20 @@ def imi_topk(
     same argmin cells as its target on both halves, so the target's
     joint cell is always among the probe's cells at any ``nprobe``."""
     cap = min(max(2 * ksub * 10_000, 100_000), _TRAIN_SAMPLE_MAX)
-    sample = _content_keyed_sample(
-        corpus.select(
-            F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")
-        ),
-        cap,
-        seed,
-    )
-    if opq:
-        # OPQ at m=2 (IMI training IS PQ training): the rotation
-        # decorrelates the two HALF-SPACES so the joint cells are
-        # closer to a product of independent quantizers — applied
-        # identically to corpus and queries, so the exact-duplicate
-        # guarantee is untouched (same rotated halves, same argmins).
-        rot, books = _train_opq(sample, 2, ksub, seed, max_iter)
-    else:
-        rot = None
-        books = _train_pq_books(sample, 2, ksub, seed, max_iter)
-
-    cb = _imi_keys(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        ),
-        books, nprobe=1, vec_col="cvec", rot=rot,
-    )
-    qb = _imi_keys(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        ),
-        books, nprobe=nprobe, vec_col="qvec", rot=rot,
-    )
-    # No distinct() needed: every corpus vector carries exactly ONE
-    # joint cell (nprobe=1) and a query's nprobe² probed cells are
-    # pairwise distinct (the traversal's seen-set admits each (i, j)
-    # frontier index once), so the equi-join cannot emit a
-    # (query, neighbor) pair twice — a dedup here would only add a
-    # wide shuffle of the vector payloads (review finding r13).
-    candidates = (
-        cb.join(F.broadcast(qb), on="cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qvec", "cvec")
-    )
-    scored = cosine_score_pairs(
-        candidates, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    sample = _content_keyed_sample(corpus, id_col, vec_col, cap, seed)
+    # OPQ at m=2 decorrelates the two HALF-SPACES, so the joint cells
+    # are closer to a product of independent quantizers.
+    rot, books = _train_books(sample, 2, ksub, seed, max_iter, opq)
+    q, c = _sides(queries, corpus, vec_col, id_col)
+    # No dedup needed: every corpus vector carries exactly ONE joint
+    # cell (nprobe=1) and a query's nprobe² probed cells are pairwise
+    # distinct (the traversal's seen-set admits each (i, j) frontier
+    # index once), so the equi-join cannot emit a (query, neighbor)
+    # pair twice — a dedup here would only add a wide shuffle of the
+    # vector payloads.
+    return _probe_topk(
+        _imi_keys(q, books, nprobe=nprobe, vec_col="qvec", rot=rot),
+        _imi_keys(c, books, nprobe=1, vec_col="cvec", rot=rot),
+        "cell",
+        k,
     )

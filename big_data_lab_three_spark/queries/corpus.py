@@ -1898,47 +1898,38 @@ def streaming_admission_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the window instead of growing with the stream — the variant
     that still works when the stream never ends."""
     import os
-    import shutil
-    import tempfile
 
     from big_data_lab_three_spark.queries.curation import (
+        admission_scope,
         batch_complete,
         index_admit_batch,
         run_foreachbatch_stream,
-        stage_admission_shards,
     )
 
     base = admission_ttl_base(spark, sf_dir)
-    base.persist()
+    with admission_scope(base, "minhash_admission_ttl_") as root:
 
-    root = tempfile.mkdtemp(prefix="minhash_admission_ttl_")
-    stage_admission_shards(base, root, range(4))
+        def admit(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_complete(os.path.join(root, "idx_bands"), batch_id):
+                return
+            # fan-out + batch re-reads live inside index_admit_batch (r16)
+            index_admit_batch(spark, batch_df, root, batch_id, ttl=1)
 
-    def admit(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_complete(os.path.join(root, "idx_bands"), batch_id):
-            return
-        # fan-out + batch re-reads live inside index_admit_batch (r16)
-        index_admit_batch(spark, batch_df, root, batch_id, ttl=1)
-
-    run_foreachbatch_stream(spark, base.schema, root, admit)
-
-    adm = spark.read.parquet(os.path.join(root, "admitted")).select(
-        F.col("id").alias("aid")
-    )
-    out = (
-        base.join(adm, base["id"] == adm["aid"], "left")
-        .groupBy(F.col("shard").cast("int").alias("shard"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count("aid").alias("n_admitted"),
-            F.coalesce(F.sum("aid"), F.lit(0)).alias("sum_admitted_id"),
+        run_foreachbatch_stream(spark, base.schema, root, admit)
+        adm = spark.read.parquet(os.path.join(root, "admitted")).select(
+            F.col("id").alias("aid")
         )
-        .orderBy("shard")
-    )
-    out = out.localCheckpoint()
-    base.unpersist()
-    shutil.rmtree(root, ignore_errors=True)  # out is checkpointed
-    return out
+        return (
+            base.join(adm, base["id"] == adm["aid"], "left")
+            .groupBy(F.col("shard").cast("int").alias("shard"))
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.count("aid").alias("n_admitted"),
+                F.coalesce(F.sum("aid"), F.lit(0)).alias("sum_admitted_id"),
+            )
+            .orderBy("shard")
+            .localCheckpoint()
+        )
 
 
 @register(
@@ -1986,39 +1977,36 @@ def parquet_schema_evolution(
     ``mergeSchema`` costs a footer read per FILE at planning time
     (why production tables pin schemas in a metastore — noted, not
     simulated); the census aggregate is combiner-friendly."""
-    import shutil
     import tempfile
 
     o = table(spark, sf_dir, "orders")
-    root = tempfile.mkdtemp(prefix="schema_evo_")
-    ver = F.when(F.col("o_orderkey") % 2 == 0, "v1").otherwise("v2")
-    o.where(F.col("o_orderkey") % 2 == 0).select(
-        "o_orderkey", "o_totalprice"
-    ).write.mode("overwrite").parquet(f"{root}/ver=v1")
-    o.where(F.col("o_orderkey") % 2 == 1).select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    ).write.mode("overwrite").parquet(f"{root}/ver=v2")
-    merged = spark.read.option("mergeSchema", "true").parquet(root)
-    out = (
-        merged.groupBy("ver")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count("o_orderpriority").alias("n_priority"),
-            # DECIMAL(12,2) before summing (ADVICE r11, the temporal.py
-            # convention): at sf1 magnitudes a double partial-sum's
-            # ordering drift can approach the 0.005 rounding margin;
-            # fixed-point sums are exact and engine-order-free
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(12,2)")), 2
+    with tempfile.TemporaryDirectory(prefix="schema_evo_") as root:
+        o.where(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_totalprice"
+        ).write.mode("overwrite").parquet(f"{root}/ver=v1")
+        o.where(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
+        ).write.mode("overwrite").parquet(f"{root}/ver=v2")
+        merged = spark.read.option("mergeSchema", "true").parquet(root)
+        return (
+            merged.groupBy("ver")
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.count("o_orderpriority").alias("n_priority"),
+                # DECIMAL(12,2) before summing (ADVICE r11, the
+                # temporal.py convention): at sf1 magnitudes a double
+                # partial-sum's ordering drift can approach the 0.005
+                # rounding margin; fixed-point sums are exact and
+                # engine-order-free
+                F.round(
+                    F.sum(F.col("o_totalprice").cast("decimal(12,2)")), 2
+                )
+                .cast("double")
+                .alias("sum_price"),
             )
-            .cast("double")
-            .alias("sum_price"),
+            .orderBy("ver")
+            .localCheckpoint()  # materialized before the dir goes
         )
-        .orderBy("ver")
-    )
-    out = out.localCheckpoint()
-    shutil.rmtree(root, ignore_errors=True)  # out is checkpointed
-    return out
 
 
 @register(
@@ -2601,6 +2589,52 @@ _NB_MARKER_CASE = (
 )
 
 
+def _nb_train(tr: DataFrame, cls, key: str):
+    """Multinomial Naive Bayes trained from counts — the one model
+    definition behind ``nb_lang_confusion`` and ``_qc_best``.  ``tr``
+    is the train fold with a ``toks`` array; ``cls`` (a column name or
+    an aliased column) is its class, output as ``key``.  Returns
+
+    - ``pri`` (key, nc): class doc counts, local-checkpointed (reused
+      by the denominator, the prior, and the caller's scoring grid);
+    - ``cw`` (key, tok, w): SPARSE hit weights ``floor(ln(cnt+1)·1e6)``
+      from the local-checkpointed per-(class, token) counts;
+    - ``dm`` (key, wd, w0): per-class denominator ``floor(ln(T_c+V)·1e6)``
+      and prior ``floor(ln(n_c/N)·1e6)``.
+
+    Every term is an exact integer, so scores compare exactly on both
+    engines (see ``nb_lang_confusion``)."""
+    from big_data_lab_three_spark.functions.numeric import (
+        micro_quantize as micro,
+    )
+
+    pri = tr.groupBy(cls).agg(F.count(F.lit(1)).alias("nc"))
+    pri = pri.localCheckpoint()  # class table, reused 3×
+    tot = pri.agg(F.sum("nc").alias("n"))
+    trt = tr.select(cls, F.explode("toks").alias("tok"))
+    cb = trt.groupBy(key, "tok").agg(F.count(F.lit(1)).alias("cnt"))
+    cb = cb.localCheckpoint()  # sparse params, feed cw + per-class totals
+    vsz = trt.agg(F.count_distinct("tok").alias("v"))
+    cw = cb.select(
+        key, "tok", micro(F.log(F.col("cnt") + F.lit(1))).alias("w")
+    )
+    dm = (
+        cb.groupBy(key)
+        .agg(F.sum("cnt").alias("t"))
+        .join(pri, key)
+        .crossJoin(F.broadcast(vsz))
+        .crossJoin(F.broadcast(tot))
+        .select(
+            key,
+            micro(F.log(F.col("t") + F.col("v"))).alias("wd"),
+            micro(
+                F.log(F.col("nc") / F.col("n").cast("double"))
+            ).alias("w0"),
+        )
+    )
+    return pri, cw, dm
+
+
 @register(
     "nb_lang_confusion",
     ids="ML: distributed multinomial Naive Bayes language classifier — "
@@ -2734,34 +2768,7 @@ def nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = d.where(F.col("fold") != 0)
     te = d.where(F.col("fold") == 0)
 
-    pri = tr.groupBy("lang").agg(F.count(F.lit(1)).alias("nc"))
-    pri = pri.localCheckpoint()  # class table, reused 3×
-    tot = pri.agg(F.sum("nc").alias("n"))
-    trt = tr.select("lang", F.explode("toks").alias("tok"))
-    cb = trt.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("cnt"))
-    cb = cb.localCheckpoint()  # sparse params, feed cw + tc
-    vsz = trt.agg(F.count_distinct("tok").alias("v"))
-    from big_data_lab_three_spark.functions.numeric import (
-        micro_quantize as micro,
-    )
-
-    cw = cb.select(
-        "lang", "tok", micro(F.log(F.col("cnt") + F.lit(1))).alias("w")
-    )
-    dm = (
-        cb.groupBy("lang")
-        .agg(F.sum("cnt").alias("t"))
-        .join(pri, "lang")
-        .crossJoin(F.broadcast(vsz))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "lang",
-            micro(F.log(F.col("t") + F.col("v"))).alias("wd"),
-            micro(
-                F.log(F.col("nc") / F.col("n").cast("double"))
-            ).alias("w0"),
-        )
-    )
+    pri, cw, dm = _nb_train(tr, "lang", "lang")
     tet = te.select(
         "doc_id",
         F.col("lang").alias("actual"),
@@ -4101,38 +4108,7 @@ def _qc_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tr = dd.where(F.col("fold") != 0)
 
-    pri = tr.groupBy(F.col("cohort").alias("cand")).agg(
-        F.count(F.lit(1)).alias("nc")
-    )
-    pri = pri.localCheckpoint()  # 2-row class table, reused 3×
-    tot = pri.agg(F.sum("nc").alias("n"))
-    trt = tr.select(
-        F.col("cohort").alias("cand"), F.explode("toks").alias("tok")
-    )
-    cb = trt.groupBy("cand", "tok").agg(F.count(F.lit(1)).alias("cnt"))
-    cb = cb.localCheckpoint()  # sparse params, feed cw + per-class totals
-    vsz = trt.agg(F.count_distinct("tok").alias("v"))
-    from big_data_lab_three_spark.functions.numeric import (
-        micro_quantize as micro,
-    )
-
-    cw = cb.select(
-        "cand", "tok", micro(F.log(F.col("cnt") + F.lit(1))).alias("w")
-    )
-    dm = (
-        cb.groupBy("cand")
-        .agg(F.sum("cnt").alias("t"))
-        .join(pri, "cand")
-        .crossJoin(F.broadcast(vsz))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "cand",
-            micro(F.log(F.col("t") + F.col("v"))).alias("wd"),
-            micro(
-                F.log(F.col("nc") / F.col("n").cast("double"))
-            ).alias("w0"),
-        )
-    )
+    pri, cw, dm = _nb_train(tr, F.col("cohort").alias("cand"), "cand")
     tet = dd.select("doc_id", F.explode("toks").alias("tok"))
     hs = (
         tet.join(cw, "tok")

@@ -16,6 +16,9 @@ the shard-summary → merge quantile path every 100 TB profile job runs.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -451,6 +454,28 @@ def stage_admission_shards(base: DataFrame, root: str, shards) -> None:
     shutil.rmtree(stage)
 
 
+@contextmanager
+def admission_scope(base: DataFrame, prefix: str) -> Iterator[str]:
+    """The whole lifetime of a streaming-admission query's temporary
+    state: persist ``base`` (the drain and the final census both read
+    it), make a temp root, stage the four shards under it, and yield
+    the root.  On EVERY exit — a failed drain included — ``base`` is
+    unpersisted and the root removed, so the caller must materialize
+    (``localCheckpoint``) anything it returns before leaving the
+    block."""
+    import shutil
+    import tempfile
+
+    root = tempfile.mkdtemp(prefix=prefix)
+    try:
+        base.persist()
+        stage_admission_shards(base, root, range(4))
+        yield root
+    finally:
+        base.unpersist()
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def admitted_table(spark: SparkSession, root: str) -> DataFrame:
     """The admitted sink (which doubles as the digest index: one
     ``batch_id=<k>`` partition per batch carries id + shard + digest;
@@ -798,33 +823,23 @@ def streaming_minhash_admission(
     near-dup check never rescans corpus text (reference point:
     ``dedup_incremental`` recomputes cross-side LSH per batch, this
     variant persists the index — the encode-at-ingest trade)."""
-    import shutil
-    import tempfile
-
     base = admission_base(spark, sf_dir)
-    base.persist()
-
-    root = tempfile.mkdtemp(prefix="minhash_admission_")
-    stage_admission_shards(base, root, range(4))
-    run_admission_stream(spark, base.schema, root)
-
-    adm = admitted_table(spark, root).select(
-        F.col("id").alias("aid"), F.col("shard").alias("ashard")
-    )
-    out = (
-        base.join(adm, base["id"] == adm["aid"], "left")
-        .groupBy(F.col("shard").cast("int").alias("shard"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count("aid").alias("n_admitted"),
-            F.coalesce(F.sum("aid"), F.lit(0)).alias("sum_admitted_id"),
+    with admission_scope(base, "minhash_admission_") as root:
+        run_admission_stream(spark, base.schema, root)
+        adm = admitted_table(spark, root).select(
+            F.col("id").alias("aid"), F.col("shard").alias("ashard")
         )
-        .orderBy("shard")
-    )
-    out = out.localCheckpoint()
-    base.unpersist()
-    shutil.rmtree(root, ignore_errors=True)  # out is checkpointed
-    return out
+        return (
+            base.join(adm, base["id"] == adm["aid"], "left")
+            .groupBy(F.col("shard").cast("int").alias("shard"))
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.count("aid").alias("n_admitted"),
+                F.coalesce(F.sum("aid"), F.lit(0)).alias("sum_admitted_id"),
+            )
+            .orderBy("shard")
+            .localCheckpoint()
+        )
 
 
 @register(

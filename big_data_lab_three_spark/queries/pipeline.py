@@ -686,46 +686,35 @@ def streaming_minhash_admission_et(
     is a scan predicate.  At 100 TB the watermark table is per-batch
     metadata, exactly like a checkpoint offset log."""
     import os
-    import shutil
-    import tempfile
 
-    from big_data_lab_three_spark.queries.curation import (
-        stage_admission_shards,
-    )
+    from big_data_lab_three_spark.queries.curation import admission_scope
 
     base = admission_et_base(spark, sf_dir)
-    base.persist()
-
-    root = tempfile.mkdtemp(prefix="minhash_admission_et_")
-    stage_admission_shards(base, root, range(4))
-    run_admission_stream_et(spark, base.schema, root)
-
-    adm = spark.read.parquet(os.path.join(root, "admitted")).select(
-        F.col("id").alias("aid")
-    )
-    late_dir = os.path.join(root, "late")
-    if os.path.isdir(late_dir):
-        late = spark.read.parquet(late_dir).select(
-            F.col("id").alias("lid")
+    with admission_scope(base, "minhash_admission_et_") as root:
+        run_admission_stream_et(spark, base.schema, root)
+        adm = spark.read.parquet(os.path.join(root, "admitted")).select(
+            F.col("id").alias("aid")
         )
-    else:  # no batch produced late rows
-        late = spark.createDataFrame([], "lid long")
-    out = (
-        base.join(adm, base["id"] == adm["aid"], "left")
-        .join(late, base["id"] == late["lid"], "left")
-        .groupBy(F.col("shard").cast("int").alias("shard"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.count("lid").alias("n_late"),
-            F.count("aid").alias("n_admitted"),
-            F.coalesce(F.sum("aid"), F.lit(0)).alias("sum_admitted_id"),
+        late_dir = os.path.join(root, "late")
+        if os.path.isdir(late_dir):
+            late = spark.read.parquet(late_dir).select(
+                F.col("id").alias("lid")
+            )
+        else:  # no batch produced late rows
+            late = spark.createDataFrame([], "lid long")
+        return (
+            base.join(adm, base["id"] == adm["aid"], "left")
+            .join(late, base["id"] == late["lid"], "left")
+            .groupBy(F.col("shard").cast("int").alias("shard"))
+            .agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.count("lid").alias("n_late"),
+                F.count("aid").alias("n_admitted"),
+                F.coalesce(F.sum("aid"), F.lit(0)).alias("sum_admitted_id"),
+            )
+            .orderBy("shard")
+            .localCheckpoint()
         )
-        .orderBy("shard")
-    )
-    out = out.localCheckpoint()
-    base.unpersist()
-    shutil.rmtree(root, ignore_errors=True)  # out is checkpointed
-    return out
 
 
 @register(

@@ -275,6 +275,18 @@ def _planted_probe_frames(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     return corpus, probes
 
 
+def _planted_readout(ann: DataFrame) -> DataFrame:
+    """The compared output of every planted-recall gate: the ANN
+    top-1 with ``cos_sim`` rounded to 4 places, ordered by query (the
+    ``_PLANTED_RECALL_ORACLE`` row order)."""
+    return ann.select(
+        "query_id",
+        "neighbor_id",
+        F.round("cos_sim", 4).alias("cos_sim"),
+        "rank",
+    ).orderBy("query_id")
+
+
 @register(
     "similarity_lsh_recall",
     ids="similarity: LSH ANN planted-probe retrieval (deterministic full oracle, all tiers)",
@@ -295,15 +307,8 @@ def similarity_lsh_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = rng.standard_normal((32, 64)).tolist()
     e = table(spark, sf_dir, "embeddings")
     corpus, probes = _planted_probe_frames(e)
-    return (
+    return _planted_readout(
         lsh_bucketed_topk(probes, corpus, planes, tables=8, k=1)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
     )
 
 
@@ -323,15 +328,8 @@ def similarity_ivf_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     value hash."""
     e = table(spark, sf_dir, "embeddings")
     corpus, probes = _planted_probe_frames(e)
-    return (
+    return _planted_readout(
         ivf_topk(probes, corpus, nlist=16, nprobe=4, k=1)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
     )
 
 
@@ -381,15 +379,8 @@ def similarity_imi_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     full value hash at every tier."""
     e = table(spark, sf_dir, "embeddings")
     corpus, probes = _planted_probe_frames(e)
-    return (
+    return _planted_readout(
         imi_topk(probes, corpus, ksub=16, nprobe=2, k=1, opq=True)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
     )
 
 
@@ -499,16 +490,9 @@ def similarity_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotation-invariant."""
     e = table(spark, sf_dir, "embeddings")
     corpus, probes = _planted_probe_frames(e)
-    return (
+    return _planted_readout(
         pq_topk(probes, corpus, m=8, ksub=16, k=1, opq=True,
                 candidates=256)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
     )
 
 
@@ -562,18 +546,11 @@ def similarity_ivfpq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cuts, and rescore under a full value hash at every tier."""
     e = table(spark, sf_dir, "embeddings")
     corpus, probes = _planted_probe_frames(e)
-    return (
+    return _planted_readout(
         ivfpq_topk(
             probes, corpus, nlist=16, nprobe=6, m=8, ksub=64, k=1,
             candidates=512,
         )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
     )
 
 

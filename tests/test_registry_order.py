@@ -5,8 +5,10 @@ first, never-driver-verified next, verified last.  Pin that contract.
 
 from __future__ import annotations
 
+import pytest
+
+from big_data_lab_three_spark import queries
 from big_data_lab_three_spark.queries import (
-    _DRIVER_ROTATION,
     _FORCE_FRONT,
     REGISTRY,
     _driver_verified,
@@ -19,6 +21,24 @@ def test_every_query_listed_exactly_once():
     names = list(load_all())
     assert sorted(names) == sorted(REGISTRY)
     assert len(names) == len(set(names))
+
+
+def test_registry_size_is_pinned():
+    """The registry cannot shrink (or grow) unnoticed: a query module
+    that stops importing, or a dropped ``@register``, fails here."""
+    assert len(load_all()) == 277
+
+
+def test_missing_query_module_fails_loud(monkeypatch):
+    """A name in ``_MODULES`` that does not import must raise, not
+    silently drop that module's queries from the registry."""
+    monkeypatch.setattr(
+        queries,
+        "_MODULES",
+        queries._MODULES + ("big_data_lab_three_spark.queries.no_such",),
+    )
+    with pytest.raises(ModuleNotFoundError):
+        load_all()
 
 
 def test_force_front_leads():
@@ -41,24 +61,6 @@ def test_unverified_precede_verified():
             assert not seen_verified, (
                 f"unverified {n!r} ordered after a verified name"
             )
-
-
-def test_rotation_priority_within_unverified():
-    """Curated family priority: among never-verified names, rotation
-    entries come before unlisted ones (the prefix budget goes to the
-    families the round plan targets)."""
-    verified = _driver_verified()
-    names = [
-        n
-        for n in load_all()
-        if n not in _FORCE_FRONT and n not in verified
-    ]
-    rotation_unverified = [
-        n
-        for n in _DRIVER_ROTATION
-        if n in REGISTRY and n not in verified and n not in _FORCE_FRONT
-    ]
-    assert names[: len(rotation_unverified)] == rotation_unverified
 
 
 def test_unverified_names_respect_module_import_order():

@@ -12,6 +12,7 @@ import os
 import duckdb
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_lab_three_spark.queries import load_all
@@ -587,3 +588,35 @@ def test_admission_replay_after_first_batch_crash(spark, sf_dir, tmp_path):
     for k, b in enumerate(batches):
         index_admit_batch(spark, b, rx, k)
     assert snap(rx) == clean
+
+
+@pytest.mark.parametrize(
+    "name, module, drain",
+    [
+        ("streaming_minhash_admission", "curation", "run_admission_stream"),
+        ("streaming_admission_ttl", "curation", "run_foreachbatch_stream"),
+        ("streaming_minhash_admission_et", "pipeline", "run_admission_stream_et"),
+    ],
+)
+def test_admission_releases_state_when_drain_fails(
+    spark, sf_dir, tmp_path, monkeypatch, name, module, drain
+):
+    """Temp dirs and persisted blocks are released on EVERY path: a
+    drain that raises must still unpersist the admission base and
+    remove the staged temp root, not only a drain that succeeds."""
+    import importlib
+    import tempfile
+
+    def failing_drain(*args, **kwargs):
+        raise RuntimeError("drain failed")
+
+    mod = importlib.import_module(f"big_data_lab_three_spark.queries.{module}")
+    monkeypatch.setattr(mod, drain, failing_drain)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="drain failed"):
+        REG[name].spark(spark, sf_dir)
+    assert not [
+        p for p in tmp_path.iterdir() if p.name.startswith("minhash_admission")
+    ]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted

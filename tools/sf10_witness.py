@@ -212,23 +212,17 @@ def check_clusters(spark, sf_dir: str) -> list[str]:
 
 
 def check_streaming_admission(spark, sf_dir: str) -> list[str]:
-    import shutil
-    import tempfile
-
     from big_data_lab_three_spark.queries.curation import (
         admission_base,
+        admission_scope,
         admitted_table,
         run_admission_stream,
-        stage_admission_shards,
     )
 
     errs: list[str] = []
     t0 = time.time()
     base = admission_base(spark, sf_dir)
-    base.persist()
-    root = tempfile.mkdtemp(prefix="sf10_admission_")
-    try:
-        stage_admission_shards(base, root, range(4))
+    with admission_scope(base, "sf10_admission_") as root:
         run_admission_stream(spark, base.schema, root)
         adm = admitted_table(spark, root).select(
             F.col("id").alias("aid")
@@ -269,9 +263,6 @@ def check_streaming_admission(spark, sf_dir: str) -> list[str]:
             f"[{time.time() - t0:.1f}s]",
             flush=True,
         )
-    finally:
-        base.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
     return errs
 
 
@@ -287,18 +278,16 @@ def check_streaming_admission_ttl(spark, sf_dir: str) -> list[str]:
     EXPIRED, so re-admission is the TTL design point; the mutate
     cohorts exercise band-key expiry the same way."""
     import os
-    import shutil
-    import tempfile
 
     from big_data_lab_three_spark.queries.corpus import (
         _COHORT_SPEC,
         admission_ttl_base,
     )
     from big_data_lab_three_spark.queries.curation import (
+        admission_scope,
         batch_complete,
         index_admit_batch,
         run_foreachbatch_stream,
-        stage_admission_shards,
     )
     from big_data_lab_three_spark.sources import table
 
@@ -308,11 +297,7 @@ def check_streaming_admission_ttl(spark, sf_dir: str) -> list[str]:
     # the EXACT stream the registered query runs — shared constructor,
     # never a re-implementation that could drift (r14 review)
     base = admission_ttl_base(spark, sf_dir)
-    base.persist()
-    root = tempfile.mkdtemp(prefix="sf10_admission_ttl_")
-    try:
-        stage_admission_shards(base, root, range(4))
-
+    with admission_scope(base, "sf10_admission_ttl_") as root:
         ttl = 1
 
         def admit(batch_df, batch_id: int) -> None:
@@ -400,9 +385,6 @@ def check_streaming_admission_ttl(spark, sf_dir: str) -> list[str]:
             f"[{time.time() - t0:.1f}s]",
             flush=True,
         )
-    finally:
-        base.unpersist()
-        shutil.rmtree(root, ignore_errors=True)
     return errs
 
 
