@@ -17,13 +17,26 @@ after every older queued name in the driver's 50-query prefix.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_lab_three_spark.functions.text import tokens
+from big_data_lab_three_spark.logger import get_logger
 from big_data_lab_three_spark.queries import register
 from big_data_lab_three_spark.queries.text import _DUCK_TOKS
 from big_data_lab_three_spark.sources import table
+
+# Shared kernels: twin queries call these, so only their family-specific
+# steps (training chain, piece map, hasher, band geometry) differ in code.
+#   _ulm_em_step                        unigram-LM EM step (4 callers)
+#   _ulm_seg_census, _ulm_length_census weighted segment census
+#   _apply_census                       corpus-apply census tail
+#   _oov_folds, _heldout_counts,        frozen-vocabulary apply scaffold
+#   _oov_census
+#   _image_near_dup                     dHash/pHash near-dup kernel
+# Each has an oracle-fragment twin (``*_sql`` / ``_OOV_HELD_SQL``).
 
 _BPE_K = 10
 
@@ -3142,6 +3155,64 @@ def _ulm_dp_from_scores(pc: DataFrame, ps: DataFrame) -> DataFrame:
     return dp.localCheckpoint()
 
 
+# Weighted segment census: the viterbi, round-2 and convergence
+# readouts all aggregate a DP frame's packed optima the same way; the
+# viterbi and round-2 censuses add the len_group = -1 long-word row.
+def _ulm_seg_census(dp: DataFrame, *by) -> DataFrame:
+    """(n_words, corpus_cnt, sum_pieces_weighted, sum_score_weighted)
+    of a DP frame's unpacked optima (``bfin = 16·S − P``), grouped by
+    ``by`` (no key: one row)."""
+    seg = dp.select(
+        "cnt",
+        "wlen",
+        F.expr("(bfin + ((- bfin) % 16)) div 16").alias("best_s"),
+        F.expr("(- bfin) % 16").alias("best_p"),
+    )
+    return seg.groupBy(*by).agg(
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum("cnt").alias("corpus_cnt"),
+        F.sum(F.col("cnt") * F.col("best_p")).alias("sum_pieces_weighted"),
+        F.sum(F.col("cnt") * F.col("best_s")).alias("sum_score_weighted"),
+    )
+
+
+def _ulm_length_census(dp: DataFrame, toks: DataFrame) -> DataFrame:
+    """The census per word-length group, plus the ``len_group = −1`` row
+    counting the vocabulary words past the unroll bound (never
+    silently dropped)."""
+    census = _ulm_seg_census(dp, F.col("wlen").cast("int").alias("len_group"))
+    longrow = toks.where(F.length("w") > _ULM_MAXLEN).agg(
+        F.lit(-1).cast("int").alias("len_group"),
+        F.count(F.lit(1)).alias("n_words"),
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("corpus_cnt"),
+        F.lit(0).cast("long").alias("sum_pieces_weighted"),
+        F.lit(0).cast("long").alias("sum_score_weighted"),
+    )
+    return census.unionByName(longrow)
+
+
+def _ulm_length_census_sql(seg: str, dp: str) -> str:
+    """DuckDB twin of ``_ulm_length_census`` over the DP CTE ``dp``,
+    opening with the ``seg`` CTE (the caller supplies the separator)."""
+    return f""" {seg} AS (
+    SELECT w, cnt, wlen,
+           (bfin + ((- bfin) % 16)) // 16 AS best_s,
+           (- bfin) % 16 AS best_p
+    FROM {dp}
+)
+SELECT CAST(wlen AS INTEGER) AS len_group,
+       CAST(count(*) AS BIGINT) AS n_words,
+       CAST(sum(cnt) AS BIGINT) AS corpus_cnt,
+       CAST(sum(cnt * best_p) AS BIGINT) AS sum_pieces_weighted,
+       CAST(sum(cnt * best_s) AS BIGINT) AS sum_score_weighted
+FROM {seg} GROUP BY wlen
+UNION ALL
+SELECT -1, CAST(count(*) AS BIGINT), CAST(coalesce(sum(cnt), 0) AS BIGINT),
+       CAST(0 AS BIGINT), CAST(0 AS BIGINT)
+FROM words WHERE length(w) > {_ULM_MAXLEN}
+"""
+
+
 def _ulm_base_sql(src: str = "documents") -> str:
     """The training front half (words → pieces → frequency scores →
     round-1 DP) as chained CTEs, parametrized on the document source
@@ -3188,24 +3259,10 @@ _ULM_BASE_SQL = _ulm_base_sql()
     ids="tokenizer: unigram-LM (SentencePiece) Viterbi segmentation — "
     "frequency-initialized piece scores, exact integer DP over every "
     "vocabulary word, corpus-weighted segmentation census",
-    oracle=_ULM_BASE_SQL + f"""), seg AS (
-    SELECT w, cnt, wlen,
-           (bfin + ((- bfin) % 16)) // 16 AS best_s,
-           (- bfin) % 16 AS best_p
-    FROM dp
-)
-SELECT CAST(wlen AS INTEGER) AS len_group,
-       CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(cnt) AS BIGINT) AS corpus_cnt,
-       CAST(sum(cnt * best_p) AS BIGINT) AS sum_pieces_weighted,
-       CAST(sum(cnt * best_s) AS BIGINT) AS sum_score_weighted
-FROM seg GROUP BY wlen
-UNION ALL
-SELECT -1, CAST(count(*) AS BIGINT), CAST(coalesce(sum(cnt), 0) AS BIGINT),
-       CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-FROM words WHERE length(w) > {_ULM_MAXLEN}
-ORDER BY len_group
-""",
+    oracle=_ULM_BASE_SQL
+    + "),"
+    + _ulm_length_census_sql("seg", "dp")
+    + "ORDER BY len_group\n",
 )
 def unigram_lm_viterbi_census(
     spark: SparkSession, sf_dir: str
@@ -3236,31 +3293,7 @@ def unigram_lm_viterbi_census(
     or the grouped-map route ``semdedup_prune`` uses — noted, bounded,
     fail-visible."""
     toks, _pc, dp = _ulm_dp_frame(spark, sf_dir)
-    seg = dp.select(
-        "w",
-        "cnt",
-        "wlen",
-        F.expr("(bfin + ((- bfin) % 16)) div 16").alias("best_s"),
-        F.expr("(- bfin) % 16").alias("best_p"),
-    )
-    census = seg.groupBy(F.col("wlen").cast("int").alias("len_group")).agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("cnt").alias("corpus_cnt"),
-        F.sum(F.col("cnt") * F.col("best_p")).alias(
-            "sum_pieces_weighted"
-        ),
-        F.sum(F.col("cnt") * F.col("best_s")).alias(
-            "sum_score_weighted"
-        ),
-    )
-    longrow = toks.where(F.length("w") > _ULM_MAXLEN).agg(
-        F.lit(-1).cast("int").alias("len_group"),
-        F.count(F.lit(1)).alias("n_words"),
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("corpus_cnt"),
-        F.lit(0).cast("long").alias("sum_pieces_weighted"),
-        F.lit(0).cast("long").alias("sum_score_weighted"),
-    )
-    return census.unionByName(longrow).orderBy("len_group")
+    return _ulm_length_census(dp, toks).orderBy("len_group")
 
 
 def _ulm_traceback_k(ix, pos: str) -> str:
@@ -3484,6 +3517,28 @@ def _ulm_rescore(m: DataFrame, allp: DataFrame, chars: DataFrame):
     )
 
 
+# Unigram-LM EM step: round 2, the convergence loop and both unigram-LM
+# applies run the same traceback → count → rescore → DP iteration.
+def _ulm_em_step(
+    dp: DataFrame, pc: DataFrame, allp: DataFrame, chars: DataFrame
+):
+    """One EM step — the round-2, convergence and both apply queries'
+    shared training iteration: Viterbi traceback of ``dp``, the
+    corpus-weighted used-piece counts ``m`` (localCheckpoint'ed: read by
+    the scores AND their total), the re-estimated kept-piece scores
+    (``_ulm_rescore``) and the DP under them.  Returns
+    ``(scores, dp_next)``."""
+    m = (
+        _ulm_traceback_pieces(dp)
+        .select("cnt", F.explode("ps").alias("p"))
+        .groupBy("p")
+        .agg(F.sum("cnt").alias("used_cnt"))
+        .localCheckpoint()
+    )
+    s = _ulm_rescore(m, allp, chars)
+    return s, _ulm_dp_from_scores(pc, s)
+
+
 def _ulm_dp2_sql(
     src_pc: str = "pc", score: str = "s2", out: str = "dp2"
 ) -> str:
@@ -3522,23 +3577,9 @@ def _ulm_dp2_sql(
     + _ULM_TB_SQL
     + _ULM_S2_SQL
     + _ulm_dp2_sql()
-    + f""", seg2 AS (
-    SELECT w, cnt, wlen,
-           (bfin + ((- bfin) % 16)) // 16 AS best_s,
-           (- bfin) % 16 AS best_p
-    FROM dp2
-)
-SELECT CAST(wlen AS INTEGER) AS len_group,
-       CAST(count(*) AS BIGINT) AS n_words,
-       CAST(sum(cnt) AS BIGINT) AS corpus_cnt,
-       CAST(sum(cnt * best_p) AS BIGINT) AS sum_pieces_weighted,
-       CAST(sum(cnt * best_s) AS BIGINT) AS sum_score_weighted
-FROM seg2 GROUP BY wlen
-UNION ALL
-SELECT -1, CAST(count(*) AS BIGINT), CAST(coalesce(sum(cnt), 0) AS BIGINT),
-       CAST(0 AS BIGINT), CAST(0 AS BIGINT)
-FROM words WHERE length(w) > {_ULM_MAXLEN}
-UNION ALL
+    + ","
+    + _ulm_length_census_sql("seg2", "dp2")
+    + """UNION ALL
 SELECT -2,
        (SELECT CAST(count(*) AS BIGINT) FROM s2),
        (SELECT CAST(count(*) AS BIGINT) FROM allp)
@@ -3569,41 +3610,8 @@ def unigram_lm_round2_census(
     scanned exactly once for word counts no matter how many EM rounds
     run."""
     toks, pc, dp = _ulm_dp_frame(spark, sf_dir)
-    tb = _ulm_traceback_pieces(dp)
-    m = (
-        tb.select("cnt", F.explode("ps").alias("p"))
-        .groupBy("p")
-        .agg(F.sum("cnt").alias("used_cnt"))
-    )
-    m = m.localCheckpoint()  # model table: scores + t2
     allp, chars = _ulm_inventory(pc)
-    s2 = _ulm_rescore(m, allp, chars)  # kept model: dp2 + kept count
-    dp2 = _ulm_dp_from_scores(pc, s2)
-    seg2 = dp2.select(
-        "cnt",
-        "wlen",
-        F.expr("(bfin + ((- bfin) % 16)) div 16").alias("best_s"),
-        F.expr("(- bfin) % 16").alias("best_p"),
-    )
-    census = seg2.groupBy(
-        F.col("wlen").cast("int").alias("len_group")
-    ).agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("cnt").alias("corpus_cnt"),
-        F.sum(F.col("cnt") * F.col("best_p")).alias(
-            "sum_pieces_weighted"
-        ),
-        F.sum(F.col("cnt") * F.col("best_s")).alias(
-            "sum_score_weighted"
-        ),
-    )
-    longrow = toks.where(F.length("w") > _ULM_MAXLEN).agg(
-        F.lit(-1).cast("int").alias("len_group"),
-        F.count(F.lit(1)).alias("n_words"),
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("corpus_cnt"),
-        F.lit(0).cast("long").alias("sum_pieces_weighted"),
-        F.lit(0).cast("long").alias("sum_score_weighted"),
-    )
+    s2, dp2 = _ulm_em_step(dp, pc, allp, chars)  # s2: dp2 + kept count
     modelrow = (
         s2.agg(F.count(F.lit(1)).alias("kept"))
         .crossJoin(
@@ -3618,7 +3626,7 @@ def unigram_lm_round2_census(
         )
     )
     return (
-        census.unionByName(longrow)
+        _ulm_length_census(dp2, toks)
         .unionByName(modelrow)
         .orderBy("len_group")
     )
@@ -3627,24 +3635,73 @@ def unigram_lm_round2_census(
 # ---------------------------------------------------------------------
 # Corpus-level tokenizer APPLY (r12 verdict item 4)
 # ---------------------------------------------------------------------
+#
+# Shared corpus-apply census tail (BPE and unigram-LM applies): each
+# family builds its memoized (tok, n_pieces) map; ``_apply_census``
+# joins it to the documents' token stream and rolls it up per document,
+# then per language (``_apply_census_sql`` is the oracle twin).
 
 
-@register(
-    "bpe_corpus_apply_census",
-    ids="tokenizer: corpus-level BPE APPLY — every document's token "
-    "stream segmented by the 10 trained merges; per-language tokens/doc, "
-    "fertility, and compression vs the character baseline",
-    oracle=_bpe_oracle_rounds()
-    + f"""
-, f AS (
-    SELECT w AS tok, CAST(count(*) AS BIGINT) AS ns
-    FROM s{_BPE_K} GROUP BY w
+def _apply_census(
+    spark: SparkSession, sf_dir: str, pieces: DataFrame, n: str
+) -> DataFrame:
+    """Per-language apply census of a ``(tok, n)`` piece-count map:
+    documents, tokens, pieces, characters, and the micro-unit
+    tokens/doc, fertility, compression and worst per-doc fertility."""
+    stream = table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
+    )
+    pd = (
+        stream.join(pieces, "tok")
+        .groupBy("doc_id", "lang")
+        .agg(
+            F.count(F.lit(1)).alias("nt"),
+            F.sum(n).alias("np"),
+            F.sum(F.length("tok")).alias("nc"),
+        )
+    )
+    return (
+        pd.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("nt").alias("n_tokens"),
+            F.sum("np").alias("n_pieces"),
+            F.sum("nc").alias("n_chars"),
+            F.max(F.expr("div(np * 1000000, nt)")).alias(
+                "worst_doc_fertility_micro"
+            ),
+        )
+        .select(
+            "lang",
+            "n_docs",
+            "n_tokens",
+            "n_pieces",
+            "n_chars",
+            F.expr("div(n_tokens * 1000000, n_docs)").alias(
+                "tokens_per_doc_micro"
+            ),
+            F.expr("div(n_pieces * 1000000, n_tokens)").alias(
+                "fertility_micro"
+            ),
+            F.expr("div(n_pieces * 1000000, n_chars)").alias(
+                "compression_micro"
+            ),
+            "worst_doc_fertility_micro",
+        )
+        .orderBy("lang")
+    )
+
+
+def _apply_census_sql(n: str) -> str:
+    """DuckDB twin of ``_apply_census``, closing the caller's ``f``
+    CTE (``tok``, ``n``)."""
+    return f"""
 ), stream AS (
     SELECT doc_id, lang, unnest({_DUCK_TOKS}) AS tok FROM documents
 ), pd AS (
     SELECT doc_id, lang,
            CAST(count(*) AS BIGINT) AS nt,
-           CAST(sum(f.ns) AS BIGINT) AS np,
+           CAST(sum(f.{n}) AS BIGINT) AS np,
            CAST(sum(length(stream.tok)) AS BIGINT) AS nc
     FROM stream JOIN f USING (tok)
     GROUP BY doc_id, lang
@@ -3661,7 +3718,20 @@ SELECT lang,
        CAST(max(np * 1000000 // nt) AS BIGINT)
            AS worst_doc_fertility_micro
 FROM pd GROUP BY lang ORDER BY lang
-""",
+"""
+
+
+@register(
+    "bpe_corpus_apply_census",
+    ids="tokenizer: corpus-level BPE APPLY — every document's token "
+    "stream segmented by the 10 trained merges; per-language tokens/doc, "
+    "fertility, and compression vs the character baseline",
+    oracle=_bpe_oracle_rounds()
+    + f"""
+, f AS (
+    SELECT w AS tok, CAST(count(*) AS BIGINT) AS ns
+    FROM s{_BPE_K} GROUP BY w"""
+    + _apply_census_sql("ns"),
 )
 def bpe_corpus_apply_census(
     spark: SparkSession, sf_dir: str
@@ -3702,48 +3772,7 @@ def bpe_corpus_apply_census(
     with ``bpe_train_merges``."""
     _, vocab = _bpe_merge_loop(spark, sf_dir)
     pieces = vocab.select("tok", F.size("syms").alias("ns"))
-    stream = table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
-    )
-    pd = (
-        stream.join(pieces, "tok")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("nt"),
-            F.sum("ns").alias("np"),
-            F.sum(F.length("tok")).alias("nc"),
-        )
-    )
-    return (
-        pd.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("nt").alias("n_tokens"),
-            F.sum("np").alias("n_pieces"),
-            F.sum("nc").alias("n_chars"),
-            F.max(F.expr("div(np * 1000000, nt)")).alias(
-                "worst_doc_fertility_micro"
-            ),
-        )
-        .select(
-            "lang",
-            "n_docs",
-            "n_tokens",
-            "n_pieces",
-            "n_chars",
-            F.expr("div(n_tokens * 1000000, n_docs)").alias(
-                "tokens_per_doc_micro"
-            ),
-            F.expr("div(n_pieces * 1000000, n_tokens)").alias(
-                "fertility_micro"
-            ),
-            F.expr("div(n_pieces * 1000000, n_chars)").alias(
-                "compression_micro"
-            ),
-            "worst_doc_fertility_micro",
-        )
-        .orderBy("lang")
-    )
+    return _apply_census(spark, sf_dir, pieces, "ns")
 
 
 # ---------------------------------------------------------------------
@@ -3875,23 +3904,8 @@ def unigram_lm_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows: list[DataFrame] = []
     for r in range(1, _ULM_K_ROUNDS + 1):
-        seg = dp.select(
-            "cnt",
-            F.expr("(bfin + ((- bfin) % 16)) div 16").alias("best_s"),
-            F.expr("(- bfin) % 16").alias("best_p"),
-        )
-        census = seg.agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("cnt").alias("corpus_cnt"),
-            F.sum(F.col("cnt") * F.col("best_p")).alias(
-                "sum_pieces_weighted"
-            ),
-            F.sum(F.col("cnt") * F.col("best_s")).alias(
-                "sum_score_weighted"
-            ),
-        )
         rows.append(
-            census.crossJoin(F.broadcast(model)).select(
+            _ulm_seg_census(dp).crossJoin(F.broadcast(model)).select(
                 F.lit(r).cast("int").alias("round"),
                 "n_words",
                 "corpus_cnt",
@@ -3902,14 +3916,7 @@ def unigram_lm_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         if r < _ULM_K_ROUNDS:
-            tb = _ulm_traceback_pieces(dp)
-            m = (
-                tb.select("cnt", F.explode("ps").alias("p"))
-                .groupBy("p")
-                .agg(F.sum("cnt").alias("used_cnt"))
-                .localCheckpoint()
-            )
-            s_next = _ulm_rescore(m, allp, chars)
+            s_next, dp = _ulm_em_step(dp, pc, allp, chars)
             model = (
                 s_next.agg(F.count(F.lit(1)).alias("kept_pieces"))
                 .crossJoin(F.broadcast(npp))
@@ -3920,7 +3927,6 @@ def unigram_lm_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ),
                 )
             )
-            dp = _ulm_dp_from_scores(pc, s_next)
     out = rows[0]
     for extra in rows[1:]:
         out = out.unionByName(extra)
@@ -4177,31 +4183,9 @@ def _qc_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     + _ULM_TB_SQL
     + _ULM_S2_SQL
     + _ulm_dp2_sql()
-    + f""", f AS (
-    SELECT w AS tok, (- bfin) % 16 AS np FROM dp2
-), stream AS (
-    SELECT doc_id, lang, unnest({_DUCK_TOKS}) AS tok FROM documents
-), pd AS (
-    SELECT doc_id, lang,
-           CAST(count(*) AS BIGINT) AS nt,
-           CAST(sum(f.np) AS BIGINT) AS np,
-           CAST(sum(length(stream.tok)) AS BIGINT) AS nc
-    FROM stream JOIN f USING (tok)
-    GROUP BY doc_id, lang
-)
-SELECT lang,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(nt) AS BIGINT) AS n_tokens,
-       CAST(sum(np) AS BIGINT) AS n_pieces,
-       CAST(sum(nc) AS BIGINT) AS n_chars,
-       CAST(sum(nt) * 1000000 // count(*) AS BIGINT)
-           AS tokens_per_doc_micro,
-       CAST(sum(np) * 1000000 // sum(nt) AS BIGINT) AS fertility_micro,
-       CAST(sum(np) * 1000000 // sum(nc) AS BIGINT) AS compression_micro,
-       CAST(max(np * 1000000 // nt) AS BIGINT)
-           AS worst_doc_fertility_micro
-FROM pd GROUP BY lang ORDER BY lang
-""",
+    + """, f AS (
+    SELECT w AS tok, (- bfin) % 16 AS np FROM dp2"""
+    + _apply_census_sql("np"),
 )
 def unigram_corpus_apply_census(
     spark: SparkSession, sf_dir: str
@@ -4233,63 +4217,13 @@ def unigram_corpus_apply_census(
     a shuffled hash join rather than forcing driver memory) — one
     per-doc combiner rollup, one per-language census: no corpus
     window, no pair stage."""
-    toks, pc, dp = _ulm_dp_frame(spark, sf_dir)
-    tb = _ulm_traceback_pieces(dp)
-    m = (
-        tb.select("cnt", F.explode("ps").alias("p"))
-        .groupBy("p")
-        .agg(F.sum("cnt").alias("used_cnt"))
-        .localCheckpoint()
-    )
-    allp, chars = _ulm_inventory(pc)
-    s2 = _ulm_rescore(m, allp, chars)
-    dp2 = _ulm_dp_from_scores(pc, s2)
+    _toks, pc, dp = _ulm_dp_frame(spark, sf_dir)
+    _s2, dp2 = _ulm_em_step(dp, pc, *_ulm_inventory(pc))
     pieces = dp2.select(
         F.col("w").alias("tok"),
         F.expr("(- bfin) % 16").alias("np"),
     )
-    stream = table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
-    )
-    pd = (
-        stream.join(pieces, "tok")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("nt"),
-            F.sum("np").alias("np"),
-            F.sum(F.length("tok")).alias("nc"),
-        )
-    )
-    return (
-        pd.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("nt").alias("n_tokens"),
-            F.sum("np").alias("n_pieces"),
-            F.sum("nc").alias("n_chars"),
-            F.max(F.expr("div(np * 1000000, nt)")).alias(
-                "worst_doc_fertility_micro"
-            ),
-        )
-        .select(
-            "lang",
-            "n_docs",
-            "n_tokens",
-            "n_pieces",
-            "n_chars",
-            F.expr("div(n_tokens * 1000000, n_docs)").alias(
-                "tokens_per_doc_micro"
-            ),
-            F.expr("div(n_pieces * 1000000, n_tokens)").alias(
-                "fertility_micro"
-            ),
-            F.expr("div(n_pieces * 1000000, n_chars)").alias(
-                "compression_micro"
-            ),
-            "worst_doc_fertility_micro",
-        )
-        .orderBy("lang")
-    )
+    return _apply_census(spark, sf_dir, pieces, "np")
 
 
 # ---------------------------------------------------------------------
@@ -4669,6 +4603,191 @@ def curation_pipeline_census(
     )
 
 
+# ---------------------------------------------------------------------
+# Frozen-vocabulary apply scaffold (BPE and unigram-LM frozen applies)
+# ---------------------------------------------------------------------
+#
+# Both families train on an md5 80% fold and segment the held-out 20%
+# with a seeded OOV arm: ``_oov_folds`` / ``_heldout_counts`` build the
+# split and the held-out counts, ``_oov_census`` the per-language
+# census (each family adds one count column of its own); the oracle
+# twins are ``_oov_train_sql``, ``_OOV_HELD_SQL`` and ``_oov_census_sql``.
+
+
+def _oov_folds(spark: SparkSession, sf_dir: str, salt: str):
+    """``(train, heldout)``: the documents split by ``md5_mod(salt,
+    doc_id, 5)`` (fold 0 held out), the held-out side as (lang, text)
+    with the seeded OOV arm."""
+    from big_data_lab_three_spark.functions.numeric import md5_mod
+
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "lang",
+        "text",
+        md5_mod(salt, F.col("doc_id"), 5).alias("fold"),
+    )
+    tr = d.where(F.col("fold") != 0)
+    # Seeded OOV arm (registry fixture convention — the synthetic
+    # corpus's templated vocabulary is fully covered by the 80% fold,
+    # so without a plant the OOV path would be vacuously green at
+    # every tier): a quarter of held-out docs gain 'qv'-repeat tokens
+    # (OOV spelled entirely in training-inventory characters — the
+    # pure segmentation path) and 'xz'-repeat tokens ('x'/'z' never
+    # appear in the corpus alphabet — the unseen-character fallback).
+    # Organic OOV, when the data has it, counts identically.
+    te = d.where(F.col("fold") == 0).select(
+        "lang",
+        F.when(
+            F.col("doc_id") % 4 == 2,
+            F.concat(
+                F.col("text"),
+                F.lit(" "),
+                F.expr("repeat('qv', CAST(1 + doc_id % 3 AS INT))"),
+                F.lit(" x"),
+                F.expr("repeat('z', CAST(1 + doc_id % 2 AS INT))"),
+            ),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    return tr, te
+
+
+def _heldout_counts(te: DataFrame) -> DataFrame:
+    """The held-out (lang, tok, cnt) token counts, localCheckpoint'ed
+    (read by the in-vocab join AND the OOV remainder)."""
+    return (
+        te.select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
+        .groupBy("lang", "tok")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .localCheckpoint()
+    )
+
+
+def _oov_census(
+    flat: DataFrame, np: str, flag: str, extra: str, at: int
+) -> DataFrame:
+    """Per-language census of a ``(lang, cnt, is_oov, np, flag)`` frame:
+    token and OOV counts, OOV micro rate, pieces and micro fertility per
+    path, and the family's ``flag`` token count ``extra`` at position
+    ``at`` of the summed columns.  Each ratio follows the sum it
+    divides (the rate after ``n_oov_tokens``, both fertilities after
+    ``pieces_oov``).  NULL fertility when a side is empty."""
+    zero = F.lit(0).cast("long")
+    oov = F.col("is_oov")
+    pieces = F.col("cnt") * F.col(np)
+
+    def cnt_if(cond, val=F.col("cnt")):
+        return F.sum(F.when(cond, val).otherwise(zero))
+
+    sums = [
+        F.sum("cnt").alias("n_tokens"),
+        cnt_if(oov).alias("n_oov_tokens"),
+        cnt_if(~oov, pieces).alias("pieces_invocab"),
+        cnt_if(oov, pieces).alias("pieces_oov"),
+    ]
+    sums.insert(at, cnt_if(F.col(flag)).alias(extra))
+    ratios = {
+        "n_oov_tokens": [
+            F.expr("n_oov_tokens * 1000000 div n_tokens").alias(
+                "oov_rate_micro"
+            )
+        ],
+        "pieces_oov": [
+            F.when(
+                F.col("n_tokens") - F.col("n_oov_tokens") > 0,
+                F.expr(
+                    "pieces_invocab * 1000000"
+                    " div (n_tokens - n_oov_tokens)"
+                ),
+            ).alias("fertility_invocab_micro"),
+            F.when(
+                F.col("n_oov_tokens") > 0,
+                F.expr("pieces_oov * 1000000 div n_oov_tokens"),
+            ).alias("fertility_oov_micro"),
+        ],
+    }
+    agg = flat.groupBy("lang").agg(*sums)
+    out = ["lang"]
+    for c in agg.columns[1:]:
+        out += [c, *ratios.get(c, [])]
+    return agg.select(*out).orderBy("lang")
+
+
+def _oov_train_sql(salt: str, train: str) -> str:
+    """The fold split as leading CTEs of ``train``, a training chain
+    rendered over ``train_docs`` (its ``WITH [RECURSIVE]`` kept)."""
+    kw = re.match(r"WITH (RECURSIVE )?", train).group(0)
+    return f"""{kw}docs_f AS MATERIALIZED (
+    SELECT doc_id, lang, text,
+           CAST(('0x' || substr(md5('{salt}' || CAST(doc_id AS VARCHAR)),
+                                1, 15)) AS BIGINT) % 5 AS fold
+    FROM documents
+), train_docs AS MATERIALIZED (
+    SELECT doc_id, lang, text FROM docs_f WHERE fold != 0
+), {train[len(kw):]}"""
+
+
+# Held-out side: the seeded OOV arm and the (lang, tok, cnt) counts.
+_OOV_HELD_SQL = f""", heldsrc AS (
+    SELECT lang,
+           CASE WHEN doc_id % 4 = 2
+                THEN text || ' ' || repeat('qv', 1 + doc_id % 3)
+                     || ' x' || repeat('z', 1 + doc_id % 2)
+                ELSE text END AS text
+    FROM docs_f WHERE fold = 0
+), held AS MATERIALIZED (
+    SELECT lang, {_DUCK_TOKS} AS toks FROM heldsrc
+), hw AS MATERIALIZED (
+    SELECT lang, tok, CAST(count(*) AS BIGINT) AS cnt
+    FROM (SELECT lang, unnest(toks) AS tok FROM held)
+    GROUP BY lang, tok
+)"""
+
+
+def _oov_census_sql(src: str, flag: str, extra: str, at: int) -> str:
+    """DuckDB twin of ``_oov_census`` over the CTE ``src`` (``at``
+    indexes the same sums; each group is a sum and its ratios)."""
+    groups = [
+        ["       CAST(sum(cnt) AS BIGINT) AS n_tokens"],
+        [
+            """       CAST(sum(CASE WHEN is_oov THEN cnt ELSE 0 END) AS BIGINT)
+           AS n_oov_tokens""",
+            """       CAST(sum(CASE WHEN is_oov THEN cnt ELSE 0 END) * 1000000
+            // sum(cnt) AS BIGINT) AS oov_rate_micro""",
+        ],
+        [
+            """       CAST(sum(CASE WHEN NOT is_oov THEN cnt * np ELSE 0 END) AS BIGINT)
+           AS pieces_invocab"""
+        ],
+        [
+            """       CAST(sum(CASE WHEN is_oov THEN cnt * np ELSE 0 END) AS BIGINT)
+           AS pieces_oov""",
+            """       CASE WHEN sum(CASE WHEN NOT is_oov THEN cnt ELSE 0 END) > 0
+            THEN CAST(sum(CASE WHEN NOT is_oov THEN cnt * np ELSE 0 END)
+                      * 1000000
+                      // sum(CASE WHEN NOT is_oov THEN cnt ELSE 0 END)
+                      AS BIGINT)
+            END AS fertility_invocab_micro""",
+            """       CASE WHEN sum(CASE WHEN is_oov THEN cnt ELSE 0 END) > 0
+            THEN CAST(sum(CASE WHEN is_oov THEN cnt * np ELSE 0 END)
+                      * 1000000
+                      // sum(CASE WHEN is_oov THEN cnt ELSE 0 END)
+                      AS BIGINT)
+            END AS fertility_oov_micro""",
+        ],
+    ]
+    groups.insert(
+        at,
+        [
+            f"""       CAST(sum(CASE WHEN {flag} THEN cnt ELSE 0 END) AS BIGINT)
+           AS {extra}"""
+        ],
+    )
+    cols = ",\n".join(c for g in groups for c in g)
+    return f"SELECT lang,\n{cols}\nFROM {src} GROUP BY lang ORDER BY lang\n"
+
+
 def _bpe_oracle_apply_rounds(k: int = _BPE_K) -> str:
     """Chained-CTE APPLY of an already-trained merge table to a
     held-out span table ``h0``: round r replays training round r's
@@ -4713,17 +4832,7 @@ def _bpe_oracle_apply_rounds(k: int = _BPE_K) -> str:
     return "".join(parts)
 
 
-_BFO_ORACLE = (
-    """WITH docs_f AS MATERIALIZED (
-    SELECT doc_id, lang, text,
-           CAST(('0x' || substr(md5('bfo:' || CAST(doc_id AS VARCHAR)),
-                                1, 15)) AS BIGINT) % 5 AS fold
-    FROM documents
-), train_docs AS MATERIALIZED (
-    SELECT doc_id, lang, text FROM docs_f WHERE fold != 0
-), """
-    + _bpe_oracle_rounds(src="train_docs")[len("WITH "):]
-)
+_BFO_ORACLE = _oov_train_sql("bfo:", _bpe_oracle_rounds(src="train_docs"))
 
 
 @register(
@@ -4733,23 +4842,11 @@ _BFO_ORACLE = (
     "in-vocab join + per-token merge fold for OOV), per-language OOV "
     "rate / fertility / unseen-char census",
     oracle=_BFO_ORACLE
-    + f"""
-, heldsrc AS (
-    SELECT lang,
-           CASE WHEN doc_id % 4 = 2
-                THEN text || ' ' || repeat('qv', 1 + doc_id % 3)
-                     || ' x' || repeat('z', 1 + doc_id % 2)
-                ELSE text END AS text
-    FROM docs_f WHERE fold = 0
-), held AS MATERIALIZED (
-    SELECT lang, {_DUCK_TOKS} AS toks FROM heldsrc
-), hw AS MATERIALIZED (
-    SELECT lang, tok, CAST(count(*) AS BIGINT) AS cnt
-    FROM (SELECT lang, unnest(toks) AS tok FROM held)
-    GROUP BY lang, tok
-), h0 AS MATERIALIZED (
+    + "\n"
+    + _OOV_HELD_SQL
+    + """, h0 AS MATERIALIZED (
     SELECT tok AS w,
-           unnest([{{'pos': i, 'sym': tok[i]}}
+           unnest([{'pos': i, 'sym': tok[i]}
                    for i in range(1, length(tok) + 1)],
                   recursive := true)
     FROM (SELECT DISTINCT tok FROM hw)
@@ -4774,32 +4871,8 @@ _BFO_ORACLE = (
     LEFT JOIN words ON hw.tok = words.tok
     LEFT JOIN unseen ON hw.tok = unseen.tok
 )
-SELECT lang,
-       CAST(sum(cnt) AS BIGINT) AS n_tokens,
-       CAST(sum(CASE WHEN is_oov THEN cnt ELSE 0 END) AS BIGINT)
-           AS n_oov_tokens,
-       CAST(sum(CASE WHEN is_oov THEN cnt ELSE 0 END) * 1000000
-            // sum(cnt) AS BIGINT) AS oov_rate_micro,
-       CAST(sum(CASE WHEN NOT is_oov THEN cnt * np ELSE 0 END) AS BIGINT)
-           AS pieces_invocab,
-       CAST(sum(CASE WHEN is_oov THEN cnt * np ELSE 0 END) AS BIGINT)
-           AS pieces_oov,
-       CASE WHEN sum(CASE WHEN NOT is_oov THEN cnt ELSE 0 END) > 0
-            THEN CAST(sum(CASE WHEN NOT is_oov THEN cnt * np ELSE 0 END)
-                      * 1000000
-                      // sum(CASE WHEN NOT is_oov THEN cnt ELSE 0 END)
-                      AS BIGINT)
-            END AS fertility_invocab_micro,
-       CASE WHEN sum(CASE WHEN is_oov THEN cnt ELSE 0 END) > 0
-            THEN CAST(sum(CASE WHEN is_oov THEN cnt * np ELSE 0 END)
-                      * 1000000
-                      // sum(CASE WHEN is_oov THEN cnt ELSE 0 END)
-                      AS BIGINT)
-            END AS fertility_oov_micro,
-       CAST(sum(CASE WHEN has_unseen THEN cnt ELSE 0 END) AS BIGINT)
-           AS n_unseen_char_tokens
-FROM flat GROUP BY lang ORDER BY lang
-""",
+"""
+    + _oov_census_sql("flat", "has_unseen", "n_unseen_char_tokens", 4),
 )
 def bpe_frozen_oov_apply_census(
     spark: SparkSession, sf_dir: str
@@ -4853,38 +4926,7 @@ def bpe_frozen_oov_apply_census(
     join if a 100 TB vocabulary outgrows the threshold), the 10-deep
     merge fold over DISTINCT OOV tokens only, and the bounded
     char-inventory anti-join.  No corpus window, no pair stage."""
-    from big_data_lab_three_spark.functions.numeric import md5_mod
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        "text",
-        md5_mod("bfo:", F.col("doc_id"), 5).alias("fold"),
-    )
-    tr = d.where(F.col("fold") != 0)
-    # Seeded OOV arm (registry fixture convention — the synthetic
-    # corpus's templated vocabulary is fully covered by the 80% fold,
-    # so without a plant the OOV path would be vacuously green at
-    # every tier): a quarter of held-out docs gain 'qv'-repeat tokens
-    # (OOV spelled entirely in training-inventory characters — the
-    # pure merge-fold path) and 'xz'-repeat tokens ('x'/'z' never
-    # appear in the corpus alphabet — the unseen-character fallback).
-    # Organic OOV, when the data has it, counts identically.
-    te = d.where(F.col("fold") == 0).select(
-        "lang",
-        F.when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(
-                F.col("text"),
-                F.lit(" "),
-                F.expr("repeat('qv', CAST(1 + doc_id % 3 AS INT))"),
-                F.lit(" x"),
-                F.expr("repeat('z', CAST(1 + doc_id % 2 AS INT))"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
+    tr, te = _oov_folds(spark, sf_dir, "bfo:")
     merges, vocab = _bpe_merge_loop(spark, sf_dir, docs=tr)
     pieces = vocab.select("tok", F.size("syms").alias("np"))
     chars = F.expr("filter(split(tok, ''), x -> x != '')")
@@ -4893,12 +4935,7 @@ def bpe_frozen_oov_apply_census(
         .distinct()
         .localCheckpoint()
     )
-    hw = (
-        te.select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
-    )
+    hw = _heldout_counts(te)
     j = hw.join(pieces, "tok", "left")
     oov_toks = (
         j.where(F.col("np").isNull()).select("tok").distinct()
@@ -4928,44 +4965,7 @@ def bpe_frozen_oov_apply_census(
             F.coalesce("has_unseen", F.lit(False)).alias("unseen"),
         )
     )
-    zero = F.lit(0).cast("long")
-    agg = flat.groupBy("lang").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.sum(F.when(F.col("is_oov"), F.col("cnt")).otherwise(zero))
-        .alias("n_oov_tokens"),
-        F.sum(
-            F.when(~F.col("is_oov"), F.col("cnt") * F.col("npc"))
-            .otherwise(zero)
-        ).alias("pieces_invocab"),
-        F.sum(
-            F.when(F.col("is_oov"), F.col("cnt") * F.col("npc"))
-            .otherwise(zero)
-        ).alias("pieces_oov"),
-        F.sum(F.when(F.col("unseen"), F.col("cnt")).otherwise(zero))
-        .alias("n_unseen_char_tokens"),
-    )
-    return agg.select(
-        "lang",
-        "n_tokens",
-        "n_oov_tokens",
-        F.expr("n_oov_tokens * 1000000 div n_tokens").alias(
-            "oov_rate_micro"
-        ),
-        "pieces_invocab",
-        "pieces_oov",
-        F.when(
-            F.col("n_tokens") - F.col("n_oov_tokens") > 0,
-            F.expr(
-                "pieces_invocab * 1000000"
-                " div (n_tokens - n_oov_tokens)"
-            ),
-        ).alias("fertility_invocab_micro"),
-        F.when(
-            F.col("n_oov_tokens") > 0,
-            F.expr("pieces_oov * 1000000 div n_oov_tokens"),
-        ).alias("fertility_oov_micro"),
-        "n_unseen_char_tokens",
-    ).orderBy("lang")
+    return _oov_census(flat, "npc", "unseen", "n_unseen_char_tokens", 4)
 
 
 _BPE_K50 = 50
@@ -5018,17 +5018,7 @@ def bpe_train_merges_k50(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 16·8·|min score| ≈ −3e9.  Any threshold between separates exactly.
 _ULM_FALLBACK_FLOOR = -(10**12)
 
-_UFO_ORACLE = (
-    """WITH RECURSIVE docs_f AS MATERIALIZED (
-    SELECT doc_id, lang, text,
-           CAST(('0x' || substr(md5('ufo:' || CAST(doc_id AS VARCHAR)),
-                                1, 15)) AS BIGINT) % 5 AS fold
-    FROM documents
-), train_docs AS MATERIALIZED (
-    SELECT doc_id, lang, text FROM docs_f WHERE fold != 0
-), """
-    + _ulm_base_sql("train_docs")[len("WITH RECURSIVE ") :]
-)
+_UFO_ORACLE = _oov_train_sql("ufo:", _ulm_base_sql("train_docs"))
 
 
 @register(
@@ -5041,20 +5031,8 @@ _UFO_ORACLE = (
     oracle=_UFO_ORACLE
     + _ULM_TB_SQL
     + _ULM_S2_SQL
-    + f""", heldsrc AS (
-    SELECT lang,
-           CASE WHEN doc_id % 4 = 2
-                THEN text || ' ' || repeat('qv', 1 + doc_id % 3)
-                     || ' x' || repeat('z', 1 + doc_id % 2)
-                ELSE text END AS text
-    FROM docs_f WHERE fold = 0
-), held AS MATERIALIZED (
-    SELECT lang, {_DUCK_TOKS} AS toks FROM heldsrc
-), hw AS MATERIALIZED (
-    SELECT lang, tok, CAST(count(*) AS BIGINT) AS cnt
-    FROM (SELECT lang, unnest(toks) AS tok FROM held)
-    GROUP BY lang, tok
-), hwords AS MATERIALIZED (
+    + _OOV_HELD_SQL
+    + f""", hwords AS MATERIALIZED (
     SELECT tok AS w, CAST(1 AS BIGINT) AS cnt
     FROM (SELECT DISTINCT tok FROM hw)
 ), hpc AS MATERIALIZED (
@@ -5075,32 +5053,8 @@ _UFO_ORACLE = (
     LEFT JOIN words ON words.w = hw.tok
     LEFT JOIN hseg ON hseg.tok = hw.tok
 )
-SELECT lang,
-       CAST(sum(cnt) AS BIGINT) AS n_tokens,
-       CAST(sum(CASE WHEN is_oov THEN cnt ELSE 0 END) AS BIGINT)
-           AS n_oov_tokens,
-       CAST(sum(CASE WHEN is_oov THEN cnt ELSE 0 END) * 1000000
-            // sum(cnt) AS BIGINT) AS oov_rate_micro,
-       CAST(sum(CASE WHEN is_fallback THEN cnt ELSE 0 END) AS BIGINT)
-           AS n_fallback_tokens,
-       CAST(sum(CASE WHEN NOT is_oov THEN cnt * np ELSE 0 END) AS BIGINT)
-           AS pieces_invocab,
-       CAST(sum(CASE WHEN is_oov THEN cnt * np ELSE 0 END) AS BIGINT)
-           AS pieces_oov,
-       CASE WHEN sum(CASE WHEN NOT is_oov THEN cnt ELSE 0 END) > 0
-            THEN CAST(sum(CASE WHEN NOT is_oov THEN cnt * np ELSE 0 END)
-                      * 1000000
-                      // sum(CASE WHEN NOT is_oov THEN cnt ELSE 0 END)
-                      AS BIGINT)
-            END AS fertility_invocab_micro,
-       CASE WHEN sum(CASE WHEN is_oov THEN cnt ELSE 0 END) > 0
-            THEN CAST(sum(CASE WHEN is_oov THEN cnt * np ELSE 0 END)
-                      * 1000000
-                      // sum(CASE WHEN is_oov THEN cnt ELSE 0 END)
-                      AS BIGINT)
-            END AS fertility_oov_micro
-FROM htab GROUP BY lang ORDER BY lang
-""",
+"""
+    + _oov_census_sql("htab", "is_fallback", "n_fallback_tokens", 2),
 )
 def unigram_frozen_oov_apply_census(
     spark: SparkSession, sf_dir: str
@@ -5144,53 +5098,15 @@ def unigram_frozen_oov_apply_census(
     cnt); the frozen map join and the OOV-remainder DP are both
     vocabulary-bounded; one per-language census.  No corpus window,
     no pair stage."""
-    from big_data_lab_three_spark.functions.numeric import md5_mod
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        "text",
-        md5_mod("ufo:", F.col("doc_id"), 5).alias("fold"),
-    )
-    tr = d.where(F.col("fold") != 0)
-    te = d.where(F.col("fold") == 0).select(
-        "lang",
-        F.when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(
-                F.col("text"),
-                F.lit(" "),
-                F.expr("repeat('qv', CAST(1 + doc_id % 3 AS INT))"),
-                F.lit(" x"),
-                F.expr("repeat('z', CAST(1 + doc_id % 2 AS INT))"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-
+    tr, te = _oov_folds(spark, sf_dir, "ufo:")
     toks_tr, pc_tr, dp1 = _ulm_dp_frame(spark, sf_dir, docs=tr)
-    tb = _ulm_traceback_pieces(dp1)
-    m = (
-        tb.select("cnt", F.explode("ps").alias("p"))
-        .groupBy("p")
-        .agg(F.sum("cnt").alias("used_cnt"))
-        .localCheckpoint()
-    )
-    allp, chars = _ulm_inventory(pc_tr)
-    s2 = _ulm_rescore(m, allp, chars)
-    dp2 = _ulm_dp_from_scores(pc_tr, s2)
+    s2, dp2 = _ulm_em_step(dp1, pc_tr, *_ulm_inventory(pc_tr))
     pieces = dp2.select(
         F.col("w").alias("tok"),
         F.expr("(- bfin) % 16").alias("np_map"),
     )
 
-    hw = (
-        te.select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
-    )
+    hw = _heldout_counts(te)
     vocab_flag = toks_tr.select(
         F.col("w").alias("tok"), F.lit(True).alias("in_vocab")
     )
@@ -5227,45 +5143,7 @@ def unigram_frozen_oov_apply_census(
             .alias("np"),
         )
     )
-    zero = F.lit(0).cast("long")
-    agg = flat.groupBy("lang").agg(
-        F.sum("cnt").alias("n_tokens"),
-        F.sum(F.when(F.col("is_oov"), F.col("cnt")).otherwise(zero))
-        .alias("n_oov_tokens"),
-        F.sum(
-            F.when(F.col("is_fallback"), F.col("cnt")).otherwise(zero)
-        ).alias("n_fallback_tokens"),
-        F.sum(
-            F.when(~F.col("is_oov"), F.col("cnt") * F.col("np"))
-            .otherwise(zero)
-        ).alias("pieces_invocab"),
-        F.sum(
-            F.when(F.col("is_oov"), F.col("cnt") * F.col("np"))
-            .otherwise(zero)
-        ).alias("pieces_oov"),
-    )
-    return agg.select(
-        "lang",
-        "n_tokens",
-        "n_oov_tokens",
-        F.expr("n_oov_tokens * 1000000 div n_tokens").alias(
-            "oov_rate_micro"
-        ),
-        "n_fallback_tokens",
-        "pieces_invocab",
-        "pieces_oov",
-        F.when(
-            F.col("n_tokens") - F.col("n_oov_tokens") > 0,
-            F.expr(
-                "pieces_invocab * 1000000"
-                " div (n_tokens - n_oov_tokens)"
-            ),
-        ).alias("fertility_invocab_micro"),
-        F.when(
-            F.col("n_oov_tokens") > 0,
-            F.expr("pieces_oov * 1000000 div n_oov_tokens"),
-        ).alias("fertility_oov_micro"),
-    ).orderBy("lang")
+    return _oov_census(flat, "np", "is_fallback", "n_fallback_tokens", 2)
 
 
 # Shared CTE core of the semantic-decontamination pair (census +
@@ -5632,8 +5510,16 @@ def _png_gen_partitions(
         )
         fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
         size = fs.getContentSummary(path).getLength()
-    except Exception:
-        return 16  # unknown FS: a safe mid fan-out, never 1-per-50-rows
+    except Exception as e:  # noqa: BLE001 - any FS failure takes the fallback
+        # unknown FS: a safe mid fan-out, never 1-per-50-rows
+        get_logger(__name__).warning(
+            "documents size lookup under %s failed (%s); PNG generation "
+            "falls back to 16 partitions",
+            sf_dir,
+            type(e).__name__,
+            exc_info=e,
+        )
+        return 16
     return max(1, int(size) // target_bytes)
 
 
@@ -5698,6 +5584,120 @@ def _md5_png_media(ids: DataFrame) -> DataFrame:
     return ids.select("id", "sk", "pj").mapInPandas(gen, MEDIA_SCHEMA)
 
 
+# Image near-dup kernel: the dHash and pHash queries differ only in the
+# hasher, the planted-pixel rule, the band geometry and the threshold.
+def _image_near_dup(
+    spark: SparkSession,
+    sf_dir: str,
+    hasher,
+    hcol: str,
+    planted_pj,
+    band_bits: int,
+    bands: int,
+    max_ham: int,
+) -> DataFrame:
+    """The image near-dup kernel shared by the dHash and pHash queries:
+    every third document keys an md5-pixel PNG (``_md5_png_media``),
+    the exact collapse keeps the min-id representative per payload
+    digest, every fifth representative plants a copy with pixel rule
+    ``planted_pj``, and ``hasher`` (a MEDIA_SCHEMA frame →
+    ``(media_id, hcol)``) hashes both arms.  Pairs at Hamming <=
+    ``max_ham`` come from a ``bands`` × ``band_bits`` pigeonhole join
+    with an exact ``bit_count(xor)`` rescore."""
+    from big_data_lab_three_spark.queries.dedup import _seed_id
+
+    ids = (
+        table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") % 3 == 0)
+        .select(
+            F.col("doc_id").alias("id"),
+            (F.col("doc_id") % 4096).alias("sk"),
+            F.lit(-1).cast("long").alias("pj"),
+        )
+    )
+    media = _md5_png_media(
+        ids.coalesce(_png_gen_partitions(spark, sf_dir))
+    )
+    # exact collapse first: min-id representative per payload digest
+    reps = (
+        media.select(
+            F.col("media_id").alias("id"),
+            (F.col("media_id") % 4096).alias("sk"),
+            "payload",
+            F.md5("payload").alias("dig"),
+        )
+        .groupBy("dig")
+        .agg(
+            F.min("id").alias("id"),
+            F.min("sk").alias("sk"),
+            F.min("payload").alias("payload"),
+        )
+        .localCheckpoint()  # reused by the planted arm + own hash
+    )
+    rep_media = reps.select(
+        F.col("id").alias("media_id"),
+        F.lit("image").alias("media_type"),
+        "payload",
+        F.struct(
+            F.lit("image/png").alias("codec"),
+            F.lit(8).alias("width"),
+            F.lit(8).alias("height"),
+            F.lit(None).cast("int").alias("sample_rate"),
+            F.lit(None).cast("int").alias("duration_ms"),
+            F.length("payload").cast("long").alias("n_bytes"),
+        ).alias("meta"),
+    )
+    planted_src = reps.where(F.col("id") % 5 == 0).select(
+        _seed_id(F.col("id")).alias("id"), "sk", planted_pj.alias("pj")
+    )
+    hashed = hasher(rep_media).unionByName(
+        hasher(_md5_png_media(planted_src))
+    )
+    banded = hashed.select(
+        "media_id",
+        hcol,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("bnd"),
+                        F.shiftright(F.col(hcol), i * band_bits)
+                        .bitwiseAND(F.lit((1 << band_bits) - 1))
+                        .alias("bits"),
+                    )
+                    for i in range(bands)
+                ]
+            )
+        ).alias("bk"),
+    ).select("media_id", hcol, "bk.bnd", "bk.bits")
+    h = hcol[0] + "h"  # side aliases dh_a/dh_b, ph_a/ph_b
+    a, b = (
+        banded.select(
+            F.col("bnd"),
+            F.col("bits"),
+            F.col("media_id").alias(f"id_{side}"),
+            F.col(hcol).alias(f"{h}_{side}"),
+        )
+        for side in "ab"
+    )
+    cands = (
+        a.join(b, ["bnd", "bits"])
+        .where(F.col("id_a") < F.col("id_b"))
+        # a pair colliding in several bands is rescored once, not per band
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    return (
+        cands.select(
+            "id_a",
+            "id_b",
+            F.bit_count(F.col(f"{h}_a").bitwiseXOR(F.col(f"{h}_b")))
+            .cast("long")
+            .alias("hamming"),
+        )
+        .where(F.col("hamming") <= max_ham)
+    )
+
+
 @register(
     "image_dhash_near_dup",
     ids="multimodal+dedup: perceptual image near-dup — REAL PNG "
@@ -5740,106 +5740,16 @@ def image_dhash_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — both key-bounded.  At 100 TB the band join's bucket sizes
     are tuned by band count exactly as `dedup_simhash` documents."""
     from big_data_lab_three_spark.multimodal.decode import image_dhash
-    from big_data_lab_three_spark.queries.dedup import _seed_id
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 3 == 0)
-        .select(
-            F.col("doc_id").alias("id"),
-            (F.col("doc_id") % 4096).alias("sk"),
-            F.lit(-1).cast("long").alias("pj"),
-        )
-    )
-    media = _md5_png_media(
-        ids.coalesce(_png_gen_partitions(spark, sf_dir))
-    )
-    # exact collapse first: min-id representative per payload digest
-    reps = (
-        media.select(
-            F.col("media_id").alias("id"),
-            (F.col("media_id") % 4096).alias("sk"),
-            "payload",
-            F.md5("payload").alias("dig"),
-        )
-        .groupBy("dig")
-        .agg(
-            F.min("id").alias("id"),
-            F.min("sk").alias("sk"),
-            F.min("payload").alias("payload"),
-        )
-        .localCheckpoint()  # reused by the planted arm + own dhash
-    )
-    rep_media = reps.select(
-        F.col("id").alias("media_id"),
-        F.lit("image").alias("media_type"),
-        "payload",
-        F.struct(
-            F.lit("image/png").alias("codec"),
-            F.lit(8).alias("width"),
-            F.lit(8).alias("height"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(None).cast("int").alias("duration_ms"),
-            F.length("payload").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    )
-    planted_src = reps.where(F.col("id") % 5 == 0).select(
-        _seed_id(F.col("id")).alias("id"),
-        "sk",
-        (F.col("id") % 64).cast("long").alias("pj"),
-    )
-    planted_media = _md5_png_media(planted_src)
-    all_dh = image_dhash(rep_media).unionByName(
-        image_dhash(planted_media)
-    )
-    banded = all_dh.select(
-        "media_id",
+    return _image_near_dup(
+        spark,
+        sf_dir,
+        image_dhash,
         "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("bnd"),
-                        F.shiftright(
-                            F.col("dhash"), i * _DHASH_BAND_BITS
-                        )
-                        .bitwiseAND(F.lit((1 << _DHASH_BAND_BITS) - 1))
-                        .alias("bits"),
-                    )
-                    for i in range(_DHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("media_id", "dhash", "bk.bnd", "bk.bits")
-    a = banded.select(
-        F.col("bnd"),
-        F.col("bits"),
-        F.col("media_id").alias("id_a"),
-        F.col("dhash").alias("dh_a"),
-    )
-    b = banded.select(
-        F.col("bnd"),
-        F.col("bits"),
-        F.col("media_id").alias("id_b"),
-        F.col("dhash").alias("dh_b"),
-    )
-    cands = (
-        a.join(b, ["bnd", "bits"])
-        .where(F.col("id_a") < F.col("id_b"))
-        # a pair colliding in several bands is rescored once, not 4×
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cands.select(
-            "id_a",
-            "id_b",
-            F.bit_count(
-                F.col("dh_a").bitwiseXOR(F.col("dh_b"))
-            )
-            .cast("long")
-            .alias("hamming"),
-        )
-        .where(F.col("hamming") <= 3)
+        planted_pj=(F.col("id") % 64).cast("long"),
+        band_bits=_DHASH_BAND_BITS,
+        bands=_DHASH_BANDS,
+        max_ham=3,
     )
 
 
@@ -5946,104 +5856,16 @@ def image_phash_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     chained Arrow stages, exchanges carry only (digest, id) and
     (band, bits, id, phash)."""
     from big_data_lab_three_spark.multimodal.decode import image_phash
-    from big_data_lab_three_spark.queries.dedup import _seed_id
 
-    ids = (
-        table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 3 == 0)
-        .select(
-            F.col("doc_id").alias("id"),
-            (F.col("doc_id") % 4096).alias("sk"),
-            F.lit(-1).cast("long").alias("pj"),
-        )
-    )
-    media = _md5_png_media(
-        ids.coalesce(_png_gen_partitions(spark, sf_dir))
-    )
-    reps = (
-        media.select(
-            F.col("media_id").alias("id"),
-            (F.col("media_id") % 4096).alias("sk"),
-            "payload",
-            F.md5("payload").alias("dig"),
-        )
-        .groupBy("dig")
-        .agg(
-            F.min("id").alias("id"),
-            F.min("sk").alias("sk"),
-            F.min("payload").alias("payload"),
-        )
-        .localCheckpoint()  # reused by the planted arm + own phash
-    )
-    rep_media = reps.select(
-        F.col("id").alias("media_id"),
-        F.lit("image").alias("media_type"),
-        "payload",
-        F.struct(
-            F.lit("image/png").alias("codec"),
-            F.lit(8).alias("width"),
-            F.lit(8).alias("height"),
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(None).cast("int").alias("duration_ms"),
-            F.length("payload").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    )
-    planted_src = reps.where(F.col("id") % 5 == 0).select(
-        _seed_id(F.col("id")).alias("id"),
-        "sk",
-        F.lit(-2).cast("long").alias("pj"),
-    )
-    planted_media = _md5_png_media(planted_src)
-    all_ph = image_phash(rep_media).unionByName(
-        image_phash(planted_media)
-    )
-    banded = all_ph.select(
-        "media_id",
+    return _image_near_dup(
+        spark,
+        sf_dir,
+        image_phash,
         "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("bnd"),
-                        F.shiftright(
-                            F.col("phash"), i * _PHASH_BAND_BITS
-                        )
-                        .bitwiseAND(
-                            F.lit((1 << _PHASH_BAND_BITS) - 1)
-                        )
-                        .alias("bits"),
-                    )
-                    for i in range(_PHASH_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("media_id", "phash", "bk.bnd", "bk.bits")
-    a = banded.select(
-        F.col("bnd"),
-        F.col("bits"),
-        F.col("media_id").alias("id_a"),
-        F.col("phash").alias("ph_a"),
-    )
-    b = banded.select(
-        F.col("bnd"),
-        F.col("bits"),
-        F.col("media_id").alias("id_b"),
-        F.col("phash").alias("ph_b"),
-    )
-    cands = (
-        a.join(b, ["bnd", "bits"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return (
-        cands.select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b")))
-            .cast("long")
-            .alias("hamming"),
-        )
-        .where(F.col("hamming") <= 2)
+        planted_pj=F.lit(-2).cast("long"),
+        band_bits=_PHASH_BAND_BITS,
+        bands=_PHASH_BANDS,
+        max_ham=2,
     )
 
 

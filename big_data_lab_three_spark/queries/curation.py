@@ -31,6 +31,7 @@ from big_data_lab_three_spark.queries import register
 from big_data_lab_three_spark.queries.stats import _EWMA_W, _EWMA_W_SQL
 from big_data_lab_three_spark.queries.text import _DUCK_TOKS
 from big_data_lab_three_spark.sources import table
+from big_data_lab_three_spark.streaming.jobs import shuffle_width
 
 
 def _contamination_hits(spark: SparkSession, sf_dir: str):
@@ -673,10 +674,9 @@ def run_foreachbatch_stream(
     )
     # batch-sized shuffles: 32 default partitions is pure per-task
     # overhead for the tiny per-batch joins (same sizing rationale as
-    # streaming.jobs.run_stream_to_table's state_partitions)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # streaming.jobs.run_stream_to_table's state_partitions).  Held
+    # through awaitTermination(): ``admit`` plans through this session.
+    with shuffle_width(spark, 8):
         q = (
             stream.writeStream.foreachBatch(admit)
             .outputMode("append")
@@ -685,8 +685,6 @@ def run_foreachbatch_stream(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_admission_stream(spark: SparkSession, schema, root: str) -> None:

@@ -952,13 +952,43 @@ def embedding_sign_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "cc_chain_census",
-    ids="dedup: planted-chain connected-components census (linear oracle — the sf1-scale witness for iterative CC)",
-    oracle="""
+# Shared by the planted connected-components censuses (cc_chain_census,
+# cc_star_census): documents are bucketed by portable md5 arithmetic,
+# each bucket is one planted component, and the readout is the
+# cluster-size histogram with the sum of canonical (minimum) labels.
+def _md5_bucket(key, buckets: int):
+    """``key``'s bucket: the first 15 hex digits of ``md5(key)`` mod
+    ``buckets`` (the oracle's ``substr(md5(...), 1, 15)``)."""
+    return (
+        F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
+        % buckets
+    )
+
+
+def _cluster_size_census(labels: DataFrame) -> DataFrame:
+    """(cluster_size, n_clusters, n_docs, sum_cluster_id) of a
+    ``(cluster_id, ...)`` labelling, one row per cluster size."""
+    sizes = labels.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).alias("sz")
+    )
+    return (
+        sizes.groupBy(F.col("sz").alias("cluster_size"))
+        .agg(
+            F.count(F.lit(1)).alias("n_clusters"),
+            F.sum("sz").alias("n_docs"),
+            F.sum("cluster_id").alias("sum_cluster_id"),
+        )
+        .orderBy("cluster_size")
+    )
+
+
+def _cc_census_oracle(key: str, buckets: int) -> str:
+    """The census's DuckDB twin: each md5 bucket of ``key`` with >= 2
+    documents is one component, labelled by its minimum doc_id."""
+    return f"""
 WITH m AS (
-  SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) % 97 AS b,
+  SELECT CAST(('0x' || substr(md5({key}), 1, 15))
+              AS BIGINT) % {buckets} AS b,
          count(*) AS sz, min(doc_id) AS mn
   FROM documents
   GROUP BY 1
@@ -969,7 +999,13 @@ SELECT CAST(sz AS BIGINT) AS cluster_size,
        CAST(sum(sz) AS BIGINT) AS n_docs,
        CAST(sum(mn) AS BIGINT) AS sum_cluster_id
 FROM m GROUP BY sz ORDER BY cluster_size
-""",
+"""
+
+
+@register(
+    "cc_chain_census",
+    ids="dedup: planted-chain connected-components census (linear oracle — the sf1-scale witness for iterative CC)",
+    oracle=_cc_census_oracle("CAST(doc_id AS VARCHAR)", 97),
 )
 def cc_chain_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planted-CHAIN census for the large-star/small-star connected
@@ -1003,14 +1039,7 @@ def cc_chain_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id")
-    b = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 97
-    )
+    b = _md5_bucket(F.col("doc_id").cast("string"), 97)
     keyed = d.select("doc_id", b.alias("b"))
     w = Window.partitionBy("b").orderBy("doc_id")
     edges = keyed.select(
@@ -1018,38 +1047,13 @@ def cc_chain_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id_b"),
     ).where(F.col("id_a").isNotNull())
     labels = connected_components_star(edges, max_iters=40)
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("sz")
-    )
-    return (
-        sizes.groupBy(F.col("sz").alias("cluster_size"))
-        .agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.sum("sz").alias("n_docs"),
-            F.sum("cluster_id").alias("sum_cluster_id"),
-        )
-        .orderBy("cluster_size")
-    )
+    return _cluster_size_census(labels)
 
 
 @register(
     "cc_star_census",
     ids="dedup: planted-star connected-components census (linear oracle — min-label propagation witness)",
-    oracle="""
-WITH m AS (
-  SELECT CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 's'), 1, 15))
-              AS BIGINT) % 53 AS b,
-         count(*) AS sz, min(doc_id) AS mn
-  FROM documents
-  GROUP BY 1
-  HAVING count(*) >= 2
-)
-SELECT CAST(sz AS BIGINT) AS cluster_size,
-       CAST(count(*) AS BIGINT) AS n_clusters,
-       CAST(sum(sz) AS BIGINT) AS n_docs,
-       CAST(sum(mn) AS BIGINT) AS sum_cluster_id
-FROM m GROUP BY sz ORDER BY cluster_size
-""",
+    oracle=_cc_census_oracle("CAST(doc_id AS VARCHAR) || 's'", 53),
 )
 def cc_star_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planted-STAR census for min-label-propagation connected
@@ -1075,19 +1079,8 @@ def cc_star_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = table(spark, sf_dir, "documents").select("doc_id")
-    b = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("s"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 53
-    )
-    keyed = d.select("doc_id", b.alias("b"))
+    salted = F.concat(F.col("doc_id").cast("string"), F.lit("s"))
+    keyed = d.select("doc_id", _md5_bucket(salted, 53).alias("b"))
     hubs = keyed.groupBy("b").agg(F.min("doc_id").alias("hub"))
     edges = (
         keyed.join(F.broadcast(hubs), "b")
@@ -1095,18 +1088,7 @@ def cc_star_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("hub").alias("id_a"), F.col("doc_id").alias("id_b"))
     )
     labels = connected_components(edges)
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("sz")
-    )
-    return (
-        sizes.groupBy(F.col("sz").alias("cluster_size"))
-        .agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.sum("sz").alias("n_docs"),
-            F.sum("cluster_id").alias("sum_cluster_id"),
-        )
-        .orderBy("cluster_size")
-    )
+    return _cluster_size_census(labels)
 
 
 @register(

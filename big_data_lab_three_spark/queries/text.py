@@ -544,10 +544,8 @@ def stratified_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "pii_scan",
-    ids="text safety: PII detection census (emails / IPs / URLs via portable regex)",
-    oracle="""
+# The PII fixture's DuckDB twin, the ``seeded`` CTE of both PII oracles.
+_PII_SEEDED_SQL = """
 WITH seeded AS (
     SELECT doc_id, lang,
            CASE WHEN doc_id % 7 = 0
@@ -556,7 +554,34 @@ WITH seeded AS (
                      '.1 see https://ex.com/d/' || doc_id
                 ELSE text END AS text
     FROM documents
-), scanned AS (
+)"""
+
+
+def _pii_seeded_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lang, text) with synthetic PII (an email, an IPv4 and a
+    URL) appended to every 7th document — the fixture both PII queries
+    and their oracles' ``seeded`` CTE build."""
+    d = table(spark, sf_dir, "documents")
+    return d.select(
+        "doc_id",
+        "lang",
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(
+                F.col("text"),
+                F.lit(" contact user"), F.col("doc_id"),
+                F.lit("@example.com at 10.0."), F.col("doc_id") % 250,
+                F.lit(".1 see https://ex.com/d/"), F.col("doc_id"),
+            ),
+        ).otherwise(F.col("text")).alias("text"),
+    )
+
+
+@register(
+    "pii_scan",
+    ids="text safety: PII detection census (emails / IPs / URLs via portable regex)",
+    oracle=_PII_SEEDED_SQL
+    + """, scanned AS (
     SELECT doc_id, lang,
            len(regexp_extract_all(text,
                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
@@ -590,20 +615,7 @@ def pii_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     one small hash aggregate — linear, no shuffle beyond the ~5-group
     rollup.  A production pass would add redaction (regexp_replace with
     the same patterns) in the same single scan."""
-    d = table(spark, sf_dir, "documents")
-    seeded = d.select(
-        "doc_id",
-        "lang",
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact user"), F.col("doc_id"),
-                F.lit("@example.com at 10.0."), F.col("doc_id") % 250,
-                F.lit(".1 see https://ex.com/d/"), F.col("doc_id"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
+    seeded = _pii_seeded_docs(spark, sf_dir)
     # function form with literal columns — an F.expr SQL string would
     # re-process the regex backslashes as SQL escapes
     email_re, ip_re, url_re = _PII_EMAIL_RE, _PII_IP_RE, _PII_URL_RE
@@ -993,16 +1005,8 @@ def training_order_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pii_redact",
     ids="text safety: span-level PII redaction, content-checksum-pinned",
-    oracle="""
-WITH seeded AS (
-    SELECT doc_id, lang,
-           CASE WHEN doc_id % 7 = 0
-                THEN text || ' contact user' || doc_id ||
-                     '@example.com at 10.0.' || (doc_id % 250) ||
-                     '.1 see https://ex.com/d/' || doc_id
-                ELSE text END AS text
-    FROM documents
-), red AS (
+    oracle=_PII_SEEDED_SQL
+    + """, red AS (
     SELECT doc_id, lang, text,
            regexp_replace(
              regexp_replace(
@@ -1038,20 +1042,7 @@ def pii_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to the scan — one codegen projection over
     the corpus, one ~5-group rollup; no shuffle carries text."""
-    d = table(spark, sf_dir, "documents")
-    seeded = d.select(
-        "doc_id",
-        "lang",
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact user"), F.col("doc_id"),
-                F.lit("@example.com at 10.0."), F.col("doc_id") % 250,
-                F.lit(".1 see https://ex.com/d/"), F.col("doc_id"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
+    seeded = _pii_seeded_docs(spark, sf_dir)
     red = seeded.withColumn("redacted", pii_redact_col(F.col("text")))
     return (
         red.groupBy("lang")

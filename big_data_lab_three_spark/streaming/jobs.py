@@ -14,6 +14,9 @@ events: the 100 TB concern is state size, not input size.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -207,6 +210,21 @@ def sessionize(stream: DataFrame, gap_minutes: int = 720) -> DataFrame:
     )
 
 
+@contextmanager
+def shuffle_width(spark: SparkSession, partitions: int) -> Iterator[None]:
+    """Pin ``spark.sql.shuffle.partitions`` to ``partitions`` for the
+    block and restore the session's value on every exit, an exception
+    included.  A streaming query reads the width once, at ``start()``;
+    a ``foreachBatch`` body that plans through the outer session reads
+    it per batch, so such a caller keeps the pin until the drain ends."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def run_stream_to_table(
     spark: SparkSession,
     result: DataFrame,
@@ -225,9 +243,9 @@ def run_stream_to_table(
     pays per-batch store overhead — size it to state volume, not to the
     batch-side shuffle default.  On a cluster this would be sized to
     executors × cores."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    # pinned around start() only: the streaming query captures its conf
+    # at start; later batch queries must see the session default.
+    with shuffle_width(spark, state_partitions):
         q = (
             result.writeStream.format("memory")
             .queryName(name)
@@ -235,10 +253,6 @@ def run_stream_to_table(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        # restore immediately: the streaming query captured its conf at
-        # start; later batch queries must see the session default.
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     return spark.table(name)
 
@@ -271,9 +285,7 @@ def run_stream_foreach_batch_parquet(
             .parquet(path)
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
+    with shuffle_width(spark, state_partitions):
         q = (
             result.writeStream.foreachBatch(write_batch)
             .outputMode(output_mode)
@@ -281,8 +293,6 @@ def run_stream_foreach_batch_parquet(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.awaitTermination()
     return spark.read.parquet(path).drop("_batch_id")
 

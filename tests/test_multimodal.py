@@ -479,3 +479,28 @@ def test_image_phash_brightness_invariance(spark):
     }
     assert got[0] == got[1], "uniform brightness shift must be Hamming 0"
     assert got[0] != got[2], "structural edit must move the hash"
+
+
+def test_png_gen_partitions_logs_fallback(spark):
+    """An input-size lookup that fails keeps the fixed 16-partition
+    fan-out but says so: a warning that carries the exception, not a
+    silent constant.  The package logger does not propagate, so the
+    warning is captured through a handler of its own."""
+    import logging
+
+    from big_data_lab_three_spark.queries.corpus import _png_gen_partitions
+
+    records: list[logging.LogRecord] = []
+    handler = logging.Handler(logging.WARNING)
+    handler.emit = records.append
+    logger = logging.getLogger("big_data_lab_three_spark.queries.corpus")
+    logger.addHandler(handler)
+    try:
+        n = _png_gen_partitions(spark, "nosuchscheme://bucket/sf")
+    finally:
+        logger.removeHandler(handler)
+    assert n == 16
+    assert [r.levelno for r in records] == [logging.WARNING]
+    assert "falls back to 16" in records[0].getMessage()
+    # the cause travels with the record, traceback included
+    assert "getFileSystem" in str(records[0].exc_info[1])

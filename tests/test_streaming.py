@@ -620,3 +620,43 @@ def test_admission_releases_state_when_drain_fails(
         p for p in tmp_path.iterdir() if p.name.startswith("minhash_admission")
     ]
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+@pytest.mark.parametrize(
+    "drain", ["to_table", "foreach_batch_parquet", "foreachbatch_stream"]
+)
+def test_shuffle_width_restored_when_start_raises(
+    spark, sf_dir, tmp_path, monkeypatch, drain
+):
+    """Each drain pins ``spark.sql.shuffle.partitions`` for its stream;
+    a ``start()`` that raises must still hand the session back at its
+    own width."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from big_data_lab_three_spark.queries.curation import (
+        run_foreachbatch_stream,
+    )
+    from big_data_lab_three_spark.streaming.jobs import (
+        read_events_stream,
+        run_stream_foreach_batch_parquet,
+    )
+
+    def failing_start(self, *args, **kwargs):
+        raise RuntimeError("start failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+    stream = read_events_stream(spark, sf_dir)
+    runs = {
+        "to_table": lambda: run_stream_to_table(spark, stream, "width_pin"),
+        "foreach_batch_parquet": lambda: run_stream_foreach_batch_parquet(
+            spark, stream, str(tmp_path / "out"), str(tmp_path / "ckpt")
+        ),
+        "foreachbatch_stream": lambda: run_foreachbatch_stream(
+            spark, stream.schema, str(tmp_path), lambda df, i: None
+        ),
+    }
+    (tmp_path / "src").mkdir()
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(RuntimeError, match="start failed"):
+        runs[drain]()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
